@@ -14,9 +14,8 @@ tests/test_search.py::test_await_all_settles_every_leg_before_raising).
 
 NOT a data-parallelism tool: each leg should be a whole Spark action
 (the cluster parallelizes inside it). Overlap legs only when they are
-truly independent — in particular, ORDERED commits (postings before
-the manifest that guards their replay) must stay sequential; overlap
-their read-only preparation phases instead.
+truly independent — writes whose visibility is ordered must stay
+sequential; overlap their read-only preparation phases instead.
 """
 
 from __future__ import annotations

@@ -98,8 +98,7 @@ MINHASH_MOD = 2147483647  # 2^31 − 1; keeps every product < 2^62 (exact int64)
 # Pair-incident id sets at or below this many ids (two per candidate
 # pair, pre-distinct) are broadcast into the verify-side semi-join;
 # larger sets fall back to the unrestricted fold (same result). ~4 M
-# longs ≈ 32 MB framed — the same order as the bm25 repair manifest
-# broadcast gate.
+# longs ≈ 32 MB framed.
 _VERIFY_RESTRICT_MAX_IDS = 4_000_000
 
 # ... and the restriction only PAYS above this corpus size (r14,
@@ -110,11 +109,10 @@ _VERIFY_RESTRICT_MAX_IDS = 4_000_000
 # whole fold is cheaper than the machinery (the r13 driver measured
 # the unconditioned restriction at +25% on the sf0.1 minhash slot,
 # 3.04 → 4.05 s), while at real corpus sizes the saved fold dominates
-# by orders of magnitude. Same guard pattern as the bm25 manifest
-# Bloom sidecar (`search._BLOOM_GUARD_MIN_DOCS`): below the threshold
-# the restriction machinery is skipped OUTRIGHT (no checkpoint, no
-# count), so the bench-scale plan is exactly the unrestricted r12
-# shape. Tests monkeypatch to 0 to exercise the restricted path.
+# by orders of magnitude. Below the threshold the restriction
+# machinery is skipped OUTRIGHT (no checkpoint, no count), so the
+# bench-scale plan is exactly the unrestricted r12 shape. Tests
+# monkeypatch to 0 to exercise the restricted path.
 _VERIFY_RESTRICT_MIN_DOCS = 100_000
 
 

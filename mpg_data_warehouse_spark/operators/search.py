@@ -15,6 +15,11 @@ postings are ~16 B/row. Queries touch |terms| buckets of
 terms ("the") make hot postings lists; index AFTER stopword-ish
 filtering (``min_term_len``/``max_df``) like every real search
 engine, or the posting list for a stopword IS the corpus.
+
+The ranked (BM25) index adds term frequencies, a ``_docs`` manifest
+and corpus stats, and lives in one ``sources/txlog`` table: every
+change is one atomic commit, and every query reads one pinned version
+(see the block comment above ``build_ranked_index``).
 """
 
 from __future__ import annotations
@@ -25,7 +30,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from mpg_data_warehouse_spark.concurrency import await_all
 from mpg_data_warehouse_spark.operators.text import norm_tokens
+from mpg_data_warehouse_spark.sources import txlog
 from mpg_data_warehouse_spark.sources.storage import (
     get_storage_backend,
     read_json,
@@ -132,10 +139,10 @@ def term_bucket_py(term: str, n_buckets: int = N_BUCKETS) -> int:
 
 META_FILE = "_index_meta.json"
 
-# doc-id-keyed manifest (id → dl + posting buckets), partitioned by an
-# id-hash bucket so replay/delete guards probe |batch| partitions and
-# never depend on the batch text matching the indexed version
-DOCS_DIR = "_docs"
+# the ranked index's doc-id-keyed manifest (id → dl + posting buckets),
+# partitioned by an id-hash bucket so replay/delete guards read
+# |batch| partitions and never depend on the batch text matching the
+# indexed version
 N_IDB = 64
 
 
@@ -143,41 +150,24 @@ def _idb(id_col, n_idb: int = N_IDB):
     return F.pmod(F.xxhash64(F.col(id_col).cast("string")), F.lit(n_idb))
 
 
-# Bucket-layout divisor: docs per partition directory before the
-# count caps at the standard layout. r13 used 256, which pushed even
-# a ~20 K-doc chunk store to the FULL 64-dir fan-out on both the
-# postings and the _docs manifest — and partitioned-write commit cost
-# is linear in directory count (measured 2.5 s for 64 dirs vs 0.7 s
-# for 16 on toy data; guide §6 small files). 2048 keeps small/medium
-# corpora at a handful of well-filled directories while any corpus
-# ≥ cap×2048 docs (≈ 131 K at the default cap — i.e. every real
-# deployment) still gets the exact 100 TB layout as before. Probe
-# pruning is unaffected in kind (searches prune to the query terms'
-# buckets under any modulus); env-tunable for cluster layouts.
-_DOCS_PER_BUCKET = int(os.environ.get("SPARK_GRAFT_DOCS_PER_BUCKET", "2048"))
+# Docs per partition before the bucket count caps at the standard
+# layout: a small corpus gets a handful of well-filled partitions, any
+# corpus ≥ cap×2048 docs the full fan-out. Probe pruning is unaffected
+# in kind (searches read only the query terms' buckets under any
+# modulus).
+_DOCS_PER_BUCKET = 2048
 
 
 def _adaptive_buckets(n_docs: int, cap: int = N_BUCKETS) -> int:
-    """Directory count scaled to the corpus: a partitioned write's
-    commit cost is LINEAR in its directory count, so a small corpus
-    must not pay the 100 TB layout's fan-out. ``_DOCS_PER_BUCKET``
-    docs per partition, floor 4, capped at the standard layout."""
+    """Partition count scaled to the corpus: a partitioned write costs
+    per partition, so a small corpus must not pay the 100 TB layout's
+    fan-out. ``_DOCS_PER_BUCKET`` docs per partition, floor 4, capped
+    at the standard layout."""
     return max(4, min(cap, n_docs // _DOCS_PER_BUCKET))
 
 
 def _write_meta(path: str, meta: dict) -> None:
     write_json_atomic(os.path.join(path, META_FILE), meta)
-
-
-def _await_all(*thunks) -> None:
-    """Run independent Spark write legs concurrently (wall = max, not
-    sum). Thin void wrapper over the shared engine helper — ONE
-    implementation of the settle-before-raise contract (see
-    mpg_data_warehouse_spark/concurrency.py; pinned by
-    test_await_all_settles_every_leg_before_raising)."""
-    from mpg_data_warehouse_spark.concurrency import await_all
-
-    await_all(*thunks)
 
 
 def _check_n_buckets(
@@ -207,16 +197,6 @@ def _resolve_n_buckets(index_path: str, requested: int | None) -> int:
     return _check_n_buckets(requested, stored, index_path)
 
 
-def _ensure_readable(
-    path: str, template: DataFrame, part_dir: str = "bucket=0"
-) -> None:
-    from mpg_data_warehouse_spark.sources.writers import (
-        ensure_readable_partition_layout,
-    )
-
-    ensure_readable_partition_layout(path, template, part_dir)
-
-
 def build_inverted_index(
     docs: DataFrame,
     path: str,
@@ -233,6 +213,10 @@ def build_inverted_index(
     scale a capped term's posting list is useless for retrieval and
     dominates index size). Distinct (term, doc) postings: one shuffle.
     """
+    from mpg_data_warehouse_spark.sources.writers import (
+        ensure_readable_partition_layout,
+    )
+
     toks = docs.select(
         F.col(id_col), F.explode(norm_tokens(text_col)).alias("term")
     ).filter(F.length("term") >= min_term_len)
@@ -256,7 +240,7 @@ def build_inverted_index(
     )
     if cached is not None:
         cached.unpersist()
-    _ensure_readable(path, postings)
+    ensure_readable_partition_layout(path, postings, "bucket=0")
     _write_meta(path, {"n_buckets": n_buckets})
 
 
@@ -309,9 +293,106 @@ def search_terms(
 
 # ---------------------------------------------------------------------------
 # Ranked (BM25) search — the scoring half of the retrieval stack.
+#
+# A ranked index is ONE ``sources/txlog`` table holding two file sets:
+# postings ``(term, id, tf, dl)`` partitioned by ``bucket=`` (term
+# hash) and the ``_docs`` manifest ``(id, dl, buckets)`` partitioned by
+# ``idb=`` (id hash). Every change — build, append, delete, compact —
+# writes its new files of both sets, then installs ONE commit that
+# adds and removes files in both and carries the corpus stats
+# (``n_docs``, ``dl_sum``, ``avgdl``, ``n_buckets``, ``n_idb``) as its
+# ``meta``. Readers pin one ``snapshot_state`` and take the stats and
+# the probed buckets' live files from it, so a query planned during an
+# append or a compaction sees one whole version. A crash before the
+# commit leaves only files no version references (``txlog.vacuum``
+# collects them), so a blind retry is always safe.
 # ---------------------------------------------------------------------------
 
-STATS_FILE = "_corpus_stats.json"
+_SETS = ("bucket", "idb")  # postings, manifest: one partition column each
+
+
+def _snapshot(path: str) -> dict:
+    try:
+        return txlog.snapshot_state(path)
+    except FileNotFoundError:
+        raise ValueError(
+            f"index at {path} has no transaction log (built by an older "
+            "layout?) — rebuild with build_ranked_index"
+        ) from None
+
+
+def _manifest_ddl(postings_ddl: str) -> str:
+    """The manifest's reader schema; its id column is the postings'."""
+    from pyspark.sql.types import _parse_datatype_string
+
+    (idf,) = [
+        f
+        for f in _parse_datatype_string(postings_ddl).fields
+        if f.name not in ("term", "tf", "dl", "bucket")
+    ]
+    return (
+        f"struct<{idf.name}:{idf.dataType.simpleString()},dl:bigint,"
+        "buckets:array<bigint>,idb:bigint>"
+    )
+
+
+def _files(state: dict, part: str, values=None) -> list[str]:
+    """Live files of one set (``part`` = ``"bucket"`` for postings,
+    ``"idb"`` for the manifest), optionally only those partition
+    values — chosen from the add actions, never by listing."""
+    want = None if values is None else {str(v) for v in values}
+    return sorted(
+        p
+        for p, a in state["files"].items()
+        if part in a["partition"]
+        and (want is None or a["partition"][part] in want)
+    )
+
+
+def _read(
+    spark: SparkSession, path: str, state: dict, part: str, values=None
+) -> DataFrame:
+    ddl = state["schema"]
+    return txlog.read_subset(
+        spark,
+        path,
+        state,
+        _files(state, part, values),
+        ddl if part == "bucket" else _manifest_ddl(ddl),
+    )
+
+
+def _write(df: DataFrame, path: str, part: str) -> list[dict]:
+    """Write one set's new files (not yet visible) and return their add
+    actions. Clustering each partition into one task first keeps it to
+    one file per partition value per write."""
+    return txlog._write_data_files(df.repartition(part), path, [part])
+
+
+def _commit(
+    path: str,
+    base: int,
+    op: str,
+    meta: dict,
+    adds: list[dict],
+    removes=(),
+    schema: str | None = None,
+) -> None:
+    """Install version ``base + 1``: the file actions of both sets and
+    the stats, all or nothing. A lost race raises ``TxConflict`` rather
+    than re-basing: the stats were derived from version ``base``."""
+    commit = {
+        "op": op,
+        "meta": meta,
+        "actions": [{"remove": {"path": p}} for p in sorted(removes)]
+        + [{"add": a} for a in adds],
+    }
+    if schema is not None:
+        commit.update(schema=schema, partition_by=list(_SETS))
+    if not txlog._try_commit(path, base + 1, commit):
+        raise txlog.TxConflict(
+            f"index at {path} moved past version {base} during {op}; retry"
+        )
 
 
 def build_ranked_index(
@@ -325,34 +406,26 @@ def build_ranked_index(
 ) -> None:
     """Posting table WITH term frequencies — the BM25 build.
 
-    Layout: ``(term, id, tf, dl)`` partitioned by term-hash bucket
-    (``dl`` denormalized into the postings so scoring needs no
-    doc-length join at query time), plus one ``_corpus_stats.json``
-    holding ``n_docs`` / ``avgdl``. ``dl`` is the count of tokens
-    surviving ``min_term_len`` and is derived as sum(tf) per doc —
-    computed BEFORE any ``max_df`` stopword cap, so capped terms
+    Postings are ``(term, id, tf, dl)`` partitioned by term-hash
+    bucket (``dl`` denormalized so scoring needs no doc-length join at
+    query time); the ``_docs`` manifest holds one row per document
+    ``(id, dl, buckets)`` partitioned by an id-hash bucket — the
+    exact-membership table that lets ``bm25_append_index``'s replay
+    guard and ``bm25_delete_index`` work from document IDS alone.
+    ``dl`` is the count of tokens surviving ``min_term_len``, taken as
+    sum(tf) per doc BEFORE any ``max_df`` stopword cap, so capped terms
     still count toward length (they were in the document).
 
     Scale: one (id, term) hash-agg over the exploded tokens (the only
     corpus-sized shuffle), one doc-grain sum over that agg, one
-    |docs|-grain join — all fixed-width rows after the first agg; the
-    stats are two scalars from a one-row collect.
-
-    Alongside the postings the build writes a ``_docs/`` manifest —
-    one row per document ``(id, dl, buckets)`` partitioned by an
-    id-hash bucket — the exact-membership side table that lets
-    ``bm25_append_index``'s replay guard and ``bm25_delete_index``
-    work from document IDS alone (no dependence on the request text
-    being byte-identical to the indexed version). Spark's file
-    listing skips ``_``-prefixed directories, so the manifest is
-    invisible to posting scans.
+    |docs|-grain join; the stats are two scalars from a one-row
+    collect.
 
     ``n_buckets=None`` (default) sizes BOTH layouts adaptively
-    (``_adaptive_buckets``): partitioned-write commit cost is linear
-    in directory count, so a small corpus gets a small layout while a
-    real one gets the full fan-out; the chosen counts are recorded in
-    the stats sidecar and every later append/delete/search reads them
-    from there — layout is a build-time decision, never re-guessed.
+    (``_adaptive_buckets``). The chosen counts ride the commit's stats
+    and every later append/delete/search reads them from there —
+    layout is a build-time decision, never re-guessed. Building over
+    an existing index is one more commit that replaces every live file.
     """
     toks = docs.select(
         F.col(id_col), F.explode(norm_tokens(text_col)).alias("term")
@@ -385,272 +458,40 @@ def build_ranked_index(
             postings = postings.join(
                 dfreq.filter(F.col("_df") <= max_df).select("term"), "term"
             )
-        postings = postings.withColumn(
-            "bucket", term_bucket(F.col("term"), n_buckets)
+        postings = postings.select(
+            "term", id_col, "tf", "dl",
+            term_bucket(F.col("term"), n_buckets).alias("bucket"),
         ).persist()
-
-        # The postings and manifest writes are independent consumers
-        # of the persisted tf lineage — run them concurrently (wall =
-        # max, not sum; both are commit-latency-bound at small scale).
-        # Pre-clean the destination explicitly, then write postings
-        # with a DYNAMIC partition overwrite: a static overwrite
-        # deletes the whole index dir at job start, which would race
-        # the concurrent _docs/ manifest write; dynamic touches only
-        # its own bucket=* dirs. The explicit delete keeps
-        # rebuild-over-existing-index semantics (no stale bucket dirs
-        # from a previous, wider layout survive).
-        get_storage_backend().delete_prefix(path)
-
-        def _postings_leg() -> None:
-            (
-                postings.repartition("bucket")
-                .write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bucket")
-                .parquet(path)
+        try:
+            man = _manifest_rows(
+                postings, dl, id_col, capped=max_df is not None, n_idb=n_idb
             )
-            _ensure_readable(path, postings.drop("bucket"))
-
-        _await_all(
-            _postings_leg,
-            lambda: _write_manifest(
-                postings, dl, path, id_col, mode="overwrite",
-                capped=max_df is not None, n_idb=n_idb,
-            ),
-        )
-        postings.unpersist()
+            # both sets are independent consumers of the persisted
+            # postings: write them concurrently (wall = max, not sum)
+            adds_p, adds_m = await_all(
+                lambda: _write(postings, path, "bucket"),
+                lambda: _write(man, path, "idb"),
+            )
+        finally:
+            postings.unpersist()
     finally:
         tf.unpersist()
-    write_json_atomic(
-        os.path.join(path, STATS_FILE),
+    base = txlog.latest_version(path)
+    _commit(
+        path,
+        base,
+        "build",
         {
             "n_docs": n_docs,
-            "avgdl": avgdl,
             "dl_sum": dl_sum,
+            "avgdl": avgdl,
             "n_buckets": n_buckets,
             "n_idb": n_idb,
         },
+        adds_p + adds_m,
+        txlog.snapshot_state(path)["files"] if base >= 0 else (),
+        schema=postings.schema.simpleString(),
     )
-    # Seed the manifest Bloom sidecar (r13) so the FIRST append
-    # already runs the two-tier guard — corpora under the guard
-    # threshold get none (the refresh no-ops via the pointer
-    # invalidation path; the exact guard is cheaper there). Committed
-    # last: a crash here just means no sidecar, and the append guard
-    # degrades to exact. ``new_ids=None``: the seed has no batch —
-    # the filter builds from the manifest alone — and passing None
-    # (r14) keeps the gated-off common path from paying a parquet
-    # footer read just to construct a ``limit(0)`` frame it never
-    # evaluates.
-    _refresh_manifest_bloom(docs.sparkSession, path, None, id_col, n_docs)
-
-
-def _manifest_path(path: str) -> str:
-    return os.path.join(path, DOCS_DIR)
-
-
-# ---------------------------------------------------------------------------
-# Manifest Bloom sidecar (r13) — the structural trim the per-phase
-# breakdown pointed at (`tools/bm25_phase_timing.py`): the append
-# replay guard's exact membership check reads the manifest's id-hash
-# partitions touched by the batch, which for a wide batch is the WHOLE
-# manifest — O(corpus) per append at scale. A blocked Bloom filter
-# over the manifest ids (operators/bloom.py — megabyte-scale,
-# broadcastable) answers "definitely new" for the fresh majority of a
-# batch with no manifest IO at all; only Bloom-positive SUSPECTS pay
-# the exact idb-pruned anti-join, so a typical append touches the
-# manifest partitions of its few suspects instead of every partition
-# its batch spans.
-#
-# Crash-safety invariant: the sidecar must always be a SUPERSET of the
-# manifest (false negatives would skip the exact check and re-insert a
-# delivered doc — silent duplication). Guaranteed by commit order
-# postings → BLOOM → manifest: a crash after the bloom commit leaves
-# extra ids in the bloom (suspects that fail the exact check — safe);
-# a crash before it leaves both bloom and manifest at their old,
-# mutually-consistent state. Deletes shrink the manifest but not the
-# bloom — still a superset, slightly higher FPR until the next
-# growth-triggered rebuild. The filter itself is committed by writing
-# a fresh versioned directory and then ATOMICALLY swapping a pointer
-# file (`write_json_atomic`), so a torn filter write is unreachable:
-# readers follow the pointer, and a half-written new version is
-# invisible until the swap. Any read/parse failure of pointer or
-# filter degrades to the exact guard (hint, not correctness input —
-# same policy as the stats sidecar in repair).
-# ---------------------------------------------------------------------------
-
-BLOOM_PTR_FILE = "_docs_bloom.json"
-_BLOOM_MIN_BITS = 1 << 20  # 128 KiB floor — tiny indexes stay cheap
-_BLOOM_TARGET_BITS_PER_KEY = 16  # rebuild sizing (~0.07% FPR at k=7)
-_BLOOM_MAX_BITS_PER_KEY = 10  # merge until this density (~1% FPR)
-_BLOOM_BROADCAST_BITS = 1 << 28  # past this the probe join shuffles
-# The sidecar exists only for corpora at least this large. Below it
-# the exact guard is strictly CHEAPER (the idb-pruned manifest read is
-# a few MB, while the bloom path costs a probe join plus an O(filter)
-# rewrite per append — measured ~+8 s on the sf0.1 lifecycle, pure
-# overhead at toy scale); above it the manifest scan the bloom spares
-# dominates. Appends that leave the corpus under the threshold
-# INVALIDATE the pointer instead of skipping the refresh — a sidecar
-# that missed one append would be a SUBSET of the manifest, whose
-# false negatives re-insert delivered docs. Invariant: a readable
-# sidecar is always current (superset); small corpora simply have
-# none. Tests monkeypatch this to 0 to exercise the bloom path.
-_BLOOM_GUARD_MIN_DOCS = 1_000_000
-
-
-def _bloom_bits_for(n_keys: int) -> int:
-    """Power-of-two filter size giving ≥ _BLOOM_TARGET_BITS_PER_KEY
-    bits per key (pow2 ⇒ multiple of 64, as bloom_build requires)."""
-    need = max(_BLOOM_MIN_BITS, n_keys * _BLOOM_TARGET_BITS_PER_KEY)
-    return 1 << (need - 1).bit_length()
-
-
-def _read_manifest_bloom(spark, path: str):
-    """(filter frame, pointer dict) or (None, None). The sidecar is
-    an optimizer hint: ANY failure — missing pointer, malformed JSON,
-    unreadable filter dir, incomplete params — degrades to the exact
-    guard rather than raising."""
-    try:
-        ptr = read_json(os.path.join(path, BLOOM_PTR_FILE))
-        if not all(
-            isinstance(ptr.get(k2), int) for k2 in ("n_bits", "k", "seed", "v")
-        ):
-            return None, None
-        df = spark.read.parquet(os.path.join(path, ptr["dir"]))
-        return df, ptr
-    except Exception:
-        return None, None
-
-
-def _commit_manifest_bloom(
-    spark, path: str, blocks: DataFrame, n_bits: int, k: int, seed: int
-) -> None:
-    """Write the filter to a fresh versioned dir, then atomically swap
-    the pointer; best-effort cleanup of versions ≤ v−2. The
-    IMMEDIATELY superseded version (v−1) is deliberately RETAINED one
-    commit: the caller's in-flight lineage (the guard's probe join,
-    and everything derived from it — tokenized postings, manifest
-    rows) still references the old filter's parquet files, and Spark
-    may recompute a persisted frame at any action; deleting v−1
-    during the same append made exactly that recompute fail with
-    FILE_NOT_EXIST. By the time v−1 becomes v−2 (the NEXT append's
-    commit), the append that read it has fully materialized and
-    unpersisted. Single maintenance writer assumed (same as the rest
-    of the index's commit protocol)."""
-    _, old_ptr = _read_manifest_bloom(spark, path)
-    ver = (old_ptr["v"] + 1) if old_ptr else 1
-    dirname = f"_docs_bloom_v{ver}"
-    # blocks are ~n_bits/4 bytes total; without the coalesce every
-    # shuffle partition emits a file (32 tiny files for a KB-scale
-    # filter). One file per ~2^31 bits (~512 MB of block rows) keeps
-    # the sidecar a handful of well-sized files at any corpus size.
-    n_files = max(1, n_bits >> 31)
-    blocks.coalesce(n_files).write.mode("overwrite").parquet(
-        os.path.join(path, dirname)
-    )
-    write_json_atomic(
-        os.path.join(path, BLOOM_PTR_FILE),
-        {"dir": dirname, "n_bits": n_bits, "k": k, "seed": seed, "v": ver},
-    )
-    try:
-        get_storage_backend().delete_prefix(
-            os.path.join(path, f"_docs_bloom_v{ver - 2}")
-        )
-    except Exception:
-        pass  # stale dir is unreachable via the pointer — harmless
-
-
-def _invalidate_manifest_bloom(path: str) -> None:
-    """Remove the POINTER only — the atomic visibility switch; every
-    reader treats its absence as 'use the exact guard'. The filter
-    dirs are deliberately left behind: the calling append's own guard
-    may have READ the current filter, and deleting its files here
-    would break the lineage of the manifest rows still to be written
-    (the same FILE_NOT_EXIST hazard the v−2 retention in
-    ``_commit_manifest_bloom`` exists for). The unreachable dirs are
-    swept by ``bm25_compact_index`` (which runs no bloom lineage) or
-    overwritten in place when a sidecar returns. No-op when no
-    sidecar exists."""
-    get_storage_backend().delete_file(os.path.join(path, BLOOM_PTR_FILE))
-
-
-def _sweep_bloom_dirs(path: str) -> None:
-    """Delete every ``_docs_bloom_v*`` dir not reachable from the
-    pointer (or all of them when there is no pointer). ONLY safe when
-    no in-flight computation can hold bloom lineage — compaction."""
-    backend = get_storage_backend()
-    try:
-        ptr = read_json(os.path.join(path, BLOOM_PTR_FILE))
-    except Exception:
-        ptr = None
-    keep = {ptr["dir"]} if ptr else set()
-    seen: set[str] = set()
-    for f in backend.list_files(path):
-        rel = f[len(path.rstrip("/")):].lstrip("/")
-        first = rel.split("/")[0]
-        if first.startswith("_docs_bloom_v") and first not in keep:
-            seen.add(first)
-    for d in sorted(seen):
-        backend.delete_prefix(os.path.join(path, d))
-
-
-def _refresh_manifest_bloom(
-    spark,
-    path: str,
-    new_ids: DataFrame | None,
-    id_col: str,
-    n_total_after: int,
-) -> None:
-    """Fold a committed batch's ids into the sidecar — called strictly
-    AFTER the postings are durable and BEFORE the manifest commit (the
-    superset invariant). While the corpus fits the current filter at
-    ≤ _BLOOM_MAX_BITS_PER_KEY density, the batch's blocks are OR-merged
-    in (O(batch) build + O(filter) rewrite); past that the filter is
-    rebuilt from the full manifest ∪ batch at the target density —
-    O(corpus), amortized-doubling like any capacity-doubling resize.
-    Corpora under ``_BLOOM_GUARD_MIN_DOCS`` get the pointer
-    INVALIDATED instead (see the threshold's comment — a skipped
-    refresh would leave a subset filter, the unsafe direction).
-    ``new_ids=None`` means "no batch" (the build-time seed): the
-    filter, when due, is (re)built from the manifest alone — callers
-    on the common gated-off path then construct no DataFrame at all
-    (r14: the seed's eager ``read.parquet`` footer probe was pure
-    per-build driver latency)."""
-    from mpg_data_warehouse_spark.operators.bloom import (
-        DEFAULT_K,
-        bloom_build,
-        bloom_merge,
-    )
-
-    if n_total_after < _BLOOM_GUARD_MIN_DOCS:
-        _invalidate_manifest_bloom(path)
-        return
-    cur, ptr = _read_manifest_bloom(spark, path)
-    if ptr is not None and n_total_after * _BLOOM_MAX_BITS_PER_KEY <= ptr[
-        "n_bits"
-    ]:
-        if new_ids is None:
-            return  # no batch to fold; the current filter already covers
-        batch_blocks = bloom_build(
-            new_ids.select(id_col),
-            id_col,
-            n_bits=ptr["n_bits"],
-            k=ptr["k"],
-            seed=ptr["seed"],
-        )
-        merged = bloom_merge(cur, batch_blocks)
-        _commit_manifest_bloom(
-            spark, path, merged, ptr["n_bits"], ptr["k"], ptr["seed"]
-        )
-        return
-    n_bits = _bloom_bits_for(n_total_after)
-    ids = new_ids.select(id_col) if new_ids is not None else None
-    if get_storage_backend().exists(_manifest_path(path)):
-        man_ids = spark.read.parquet(_manifest_path(path)).select(id_col)
-        ids = man_ids if ids is None else man_ids.unionByName(ids)
-    if ids is None:
-        return  # no manifest and no batch — nothing to build from
-    blocks = bloom_build(ids, id_col, n_bits=n_bits)
-    _commit_manifest_bloom(spark, path, blocks, n_bits, DEFAULT_K, 0)
 
 
 def _manifest_rows(
@@ -681,36 +522,6 @@ def _manifest_rows(
     return bsets.withColumn("idb", _idb(id_col, n_idb))
 
 
-def _write_manifest(
-    postings: DataFrame,
-    dl: DataFrame,
-    path: str,
-    id_col: str,
-    mode: str,
-    capped: bool = False,
-    n_idb: int = N_IDB,
-    rows: DataFrame | None = None,
-) -> None:
-    """Commit manifest rows (computed here, or pre-materialized
-    ``rows`` from ``_manifest_rows`` — the append path computes them
-    CONCURRENTLY with the postings write, then commits them strictly
-    after it)."""
-    man = (
-        rows
-        if rows is not None
-        else _manifest_rows(postings, dl, id_col, capped, n_idb)
-    )
-    # co-locate each idb partition into one task: without this the
-    # partitioned write fans out to (shuffle partitions × idb) tiny
-    # files — small-file debt AND measurable write overhead
-    man.repartition("idb").write.mode(mode).partitionBy("idb").parquet(
-        _manifest_path(path)
-    )
-    _ensure_readable(
-        _manifest_path(path), man.drop("idb"), part_dir="idb=0"
-    )
-
-
 def bm25_search_many(
     spark: SparkSession,
     index_path: str,
@@ -732,10 +543,13 @@ def bm25_search_many(
     summed over the query's DISTINCT terms (query-side tf is 1 —
     standard for short queries).
 
-    Scale: the scan touches only the query terms' hash-bucket
-    partitions (same PartitionFilters pushdown as ``search_terms``);
-    ``df`` comes from the probed posting lists themselves (count per
-    term — no corpus pass); per-query top-k is a WindowGroupLimit.
+    The stats and the probed buckets' live files come from ONE pinned
+    version of the index, so the returned frame answers from that
+    version even if it is collected after a later append or
+    compaction. Scale: the scan touches only the query terms' bucket
+    files; ``df`` comes from the probed posting lists themselves
+    (count per term — no corpus pass); per-query top-k is a
+    WindowGroupLimit.
     """
     if not queries:
         raise ValueError("queries is empty")
@@ -746,20 +560,18 @@ def bm25_search_many(
     ]
     if not qterms:
         raise ValueError("no non-empty query terms")
-    stats = read_json(os.path.join(index_path, STATS_FILE))
+    state = _snapshot(index_path)
+    stats = state["meta"]
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
-    n_buckets = _check_n_buckets(
-        n_buckets, stats.get("n_buckets"), index_path
-    )
+    n_buckets = _check_n_buckets(n_buckets, stats["n_buckets"], index_path)
 
     qdf = spark.createDataFrame(qterms, "query_id long, term string")
     # bucket probe DRIVER-SIDE (r13): ``term_bucket_py`` replaces the
     # LocalTableScan-collect planning job entirely (parity pinned in
     # tests; a drifted bucket prunes wrong and fails the oracle)
     buckets = sorted({term_bucket_py(t, n_buckets) for _, t in qterms})
-    postings = spark.read.parquet(index_path).filter(
-        F.col("bucket").isin(buckets)
-        & F.col("term").isin(sorted({t for _, t in qterms}))
+    postings = _read(spark, index_path, state, "bucket", buckets).filter(
+        F.col("term").isin(sorted({t for _, t in qterms}))
     )
     # df per term from the probed lists (posting rows are one per
     # (term, doc)); tiny — at most |query terms| rows
@@ -814,109 +626,45 @@ def bm25_append_index(
     min_term_len: int = 1,
 ) -> int:
     """Incrementally maintain a ranked index: tokenize ONLY the new
-    batch, append its (term, id, tf, dl) postings to the matching
-    bucket partitions, and advance the corpus stats arithmetically
-    (new avgdl = (old_sum + batch_sum) / (old_n + batch_n)) — the
-    continual-ingest shape (``similarity.ivf_append_index`` for
-    vectors): daily arrivals cost O(|batch|), never an O(corpus)
-    rebuild. BM25's df is derived from the probed posting lists at
-    query time, so appended postings re-weight idf immediately with
-    no stored state to refresh.
+    batch, add its postings and manifest rows as new files, and
+    advance the corpus stats arithmetically (new avgdl = (old_sum +
+    batch_sum) / (old_n + batch_n)) — the continual-ingest shape
+    (``similarity.ivf_append_index`` for vectors): daily arrivals cost
+    O(|batch|), never an O(corpus) rebuild. BM25's df is derived from
+    the probed posting lists at query time, so appended postings
+    re-weight idf with no stored state to refresh.
 
-    Replay guard: batch ids already present in the index are dropped
-    BEFORE tokenization (r10 — a fully-replayed delivery costs the
-    membership probe plus one scan of the batch, never the explode+agg
-    tokenize pass, which dominates the lifecycle at corpus scale), so
-    at-least-once upstream delivery cannot double-insert a document.
-    The membership check is TWO-TIER (r13): the ``_docs_bloom``
-    sidecar (a blocked Bloom over the manifest ids — no false
-    negatives) clears the definitely-new majority of the batch with
-    one broadcast probe and zero manifest IO; only Bloom-positive
-    suspects pay the exact ``_docs`` manifest anti-join, pruned to
-    the SUSPECTS' id-hash partitions. Without a readable sidecar the
-    guard degrades to the r10 exact form (manifest partitions of the
-    whole batch). Either way the check is exact and holds even if the
-    redelivered batch carries MUTATED text, which the previous
-    term-bucket probe could miss. The sidecar is advanced between the
-    postings and manifest commits (superset invariant — see the
-    sidecar block comment above ``_read_manifest_bloom``); each
-    append rewrites the O(filter) blocks table, which at ~16 bits/key
-    is far smaller than the manifest it spares the guard from
-    scanning (an LSM-style delta-filter list would amortize even
-    that, at the cost of a per-probe merge — noted, not needed at
-    current scale). ``max_df`` capping is a BUILD-time decision and
-    is not re-applied here — recap on the periodic rebuild cadence,
-    like IVF centroid refresh. Returns the number of documents
-    appended."""
+    Replay guard: batch ids already in the ``_docs`` manifest are
+    dropped BEFORE tokenization (a fully-replayed delivery costs the
+    membership probe, never the explode+agg tokenize pass, and adds no
+    version), so at-least-once upstream delivery cannot double-insert
+    a document. The check reads only the manifest partitions the
+    batch's ids hash to, and holds even if the redelivered batch
+    carries MUTATED text. ``max_df`` capping is a BUILD-time decision
+    and is not re-applied here — recap on the periodic rebuild
+    cadence, like IVF centroid refresh. Returns the number of
+    documents appended."""
     spark = docs.sparkSession
-    stats = read_json(os.path.join(path, STATS_FILE))
-    n_buckets = _check_n_buckets(None, stats.get("n_buckets"), path)
-    n_idb = int(stats.get("n_idb", N_IDB))
-    _require_manifest(path)
+    state = _snapshot(path)
+    stats = state["meta"]
+    n_buckets, n_idb = stats["n_buckets"], stats["n_idb"]
 
-    # The replay guard runs BEFORE tokenization (r10): the guard needs
-    # only document IDS, and tokenizing the batch first made a fully-
-    # replayed delivery pay the batch's whole explode+agg cost to
-    # learn it has nothing to do — at corpus scale the tokenize pass
-    # dominates the lifecycle. The batch is PERSISTED first so the
-    # probe and the (post-guard) tokenize read ONE materialization of
-    # the input — a nondeterministic upstream (sample/limit)
-    # re-evaluated between them could otherwise yield ids the guard
-    # never probed. The persisted projection is the delta batch
-    # (id + text), bounded by the arrival, not the corpus.
+    # The batch is PERSISTED so the guard's probe and the tokenize
+    # read ONE materialization of the input — a nondeterministic
+    # upstream (sample/limit) re-evaluated between them could
+    # otherwise yield ids the guard never probed. The persisted
+    # projection is the delta batch (id + text), not the corpus.
     batch = docs.select(F.col(id_col), F.col(text_col)).persist()
     pinned = [batch]  # released in finally even on a failed write
     try:
-        # Two-tier replay guard (r13): when the Bloom sidecar is
-        # readable, only its POSITIVE suspects pay the exact manifest
-        # check — and the manifest read prunes to the suspects' idb
-        # partitions, not the whole batch's. A fully-fresh delivery
-        # (the common continual-ingest case) thus costs one broadcast
-        # filter probe and ZERO manifest partitions instead of an
-        # O(manifest) scan. No false negatives (bloom.py invariant),
-        # so the guard's answer is identical to the exact anti-join.
-        bloom_df, ptr = _read_manifest_bloom(spark, path)
-        if bloom_df is not None:
-            from mpg_data_warehouse_spark.operators.bloom import (
-                bloom_maybe_seen,
-            )
-
-            probed = bloom_maybe_seen(
-                batch,
-                id_col,
-                bloom_df,
-                n_bits=ptr["n_bits"],
-                k=ptr["k"],
-                seed=ptr["seed"],
-                broadcast_filter=ptr["n_bits"] <= _BLOOM_BROADCAST_BITS,
-            ).persist()
-            pinned.append(probed)
-            check = probed.filter(F.col("maybe_seen")).drop("maybe_seen")
-        else:
-            probed = None
-            check = batch
-        idbs = sorted(
+        idbs = [
             r["i"]
-            for r in check.select(_idb(id_col, n_idb).alias("i"))
+            for r in batch.select(_idb(id_col, n_idb).alias("i"))
             .distinct()
             .collect()
-        )
-        if idbs:
-            existing = (
-                spark.read.parquet(_manifest_path(path))
-                .filter(F.col("idb").isin(idbs))
-                .select(id_col)
-                .distinct()
-            )
-            checked = check.join(existing, id_col, "left_anti")
-        else:  # empty batch / zero suspects — nothing to check exactly
-            checked = check
-        if probed is not None:
-            fresh = probed.filter(~F.col("maybe_seen")).drop(
-                "maybe_seen"
-            ).unionByName(checked)
-        else:
-            fresh = checked
+        ]
+        existing = _read(spark, path, state, "idb", idbs).select(id_col)
+        fresh = batch.join(existing, id_col, "left_anti")
 
         toks = fresh.select(
             F.col(id_col), F.explode(norm_tokens(text_col)).alias("term")
@@ -927,90 +675,46 @@ def bm25_append_index(
             .persist()
         )
         pinned.append(tf)
-        dl = tf.groupBy(id_col).agg(F.sum("tf").cast("long").alias("dl"))
-        fresh_dl = dl.persist()
-        pinned.append(fresh_dl)
-        batch_row = fresh_dl.agg(
+        dl = (
+            tf.groupBy(id_col)
+            .agg(F.sum("tf").cast("long").alias("dl"))
+            .persist()
+        )
+        pinned.append(dl)
+        batch_row = dl.agg(
             F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
         ).first()
         n_new = int(batch_row["n"] or 0)
         if n_new == 0:
             return 0
         postings = (
-            tf.join(fresh_dl, id_col)
-            .withColumn("bucket", term_bucket(F.col("term"), n_buckets))
+            tf.join(dl, id_col)
+            .select(
+                "term", id_col, "tf", "dl",
+                term_bucket(F.col("term"), n_buckets).alias("bucket"),
+            )
             .persist()
         )
         pinned.append(postings)
-        # co-locate each bucket into one task before the partitioned
-        # append — an unclustered write fans every shuffle task into
-        # every bucket it touches (tasks × buckets small files per
-        # APPEND, compounding across batches). COMMIT ORDER IS LOAD-
-        # BEARING: the manifest is the replay guard, so it must only
-        # ever list docs whose postings are already durable — postings
-        # first, manifest after. (The r10 concurrent form could lose a
-        # batch PERMANENTLY: a failed postings leg after a committed
-        # manifest leg made the retry see every id 'already indexed'
-        # and drop the redelivery.) In this order a crash between the
-        # two commits leaves orphaned postings — rows whose id is
-        # absent from the manifest — which the retry would duplicate;
-        # run ``bm25_repair_index`` before retrying a crashed append
-        # (one scoped scrub pass; see its docstring).
-        # The manifest's COMPUTE (a |batch|-grain agg) is safe to
-        # overlap with the postings write — only its COMMIT must
-        # wait: the rows materialize into a persisted frame
-        # concurrently, then install strictly after the postings are
-        # durable.
-        from mpg_data_warehouse_spark.concurrency import await_all
-
-        def _man_prep() -> DataFrame:
-            rows = _manifest_rows(
-                postings, fresh_dl, id_col, n_idb=n_idb
-            ).persist()
-            rows.count()
-            pinned.append(rows)
-            return rows
-
-        man_rows, _ = await_all(
-            _man_prep,
-            lambda: postings.repartition("bucket")
-            .write.mode("append")
-            .partitionBy("bucket")
-            .parquet(path),
+        man = _manifest_rows(postings, dl, id_col, n_idb=n_idb)
+        adds_p, adds_m = await_all(
+            lambda: _write(postings, path, "bucket"),
+            lambda: _write(man, path, "idb"),
         )
-        # bloom BEFORE manifest (superset invariant — see sidecar
-        # block comment): a crash here leaves the new ids in the
-        # bloom but not the manifest, which only costs suspects an
-        # exact check; the reverse order could skip the check for a
-        # manifest-listed doc and double-insert on replay
-        _refresh_manifest_bloom(
-            spark, path, fresh_dl.select(id_col), id_col,
-            stats["n_docs"] + n_new,
-        )
-        _write_manifest(
-            postings, fresh_dl, path, id_col, mode="append",
-            n_idb=n_idb, rows=man_rows,
-        )
-        old_sum = stats.get("dl_sum", stats["avgdl"] * stats["n_docs"])
         n_docs = stats["n_docs"] + n_new
-        dl_sum = old_sum + int(batch_row["s"])
-        stats.update(
-            {"n_docs": n_docs, "avgdl": dl_sum / n_docs, "dl_sum": dl_sum}
+        dl_sum = stats["dl_sum"] + int(batch_row["s"])
+        _commit(
+            path,
+            state["version"],
+            "append",
+            {**stats, "n_docs": n_docs, "dl_sum": dl_sum,
+             "avgdl": dl_sum / n_docs},
+            adds_p + adds_m,
         )
-        write_json_atomic(os.path.join(path, STATS_FILE), stats)
         return n_new
     finally:
         for df in pinned:
             df.unpersist()
-
-
-def _require_manifest(path: str) -> None:
-    if not get_storage_backend().exists(_manifest_path(path)):
-        raise ValueError(
-            f"index at {path} has no {DOCS_DIR}/ manifest (built by an "
-            "older build?) — rebuild with build_ranked_index before "
-            "incremental maintenance"
-        )
 
 
 def bm25_delete_index(
@@ -1020,44 +724,32 @@ def bm25_delete_index(
 ) -> int:
     """Targeted deletion from a ranked index (right-to-be-forgotten)
     by document ID: the ``_docs`` manifest maps each id to its
-    posting buckets, so the affected bucket partitions are found with
-    a ≤|batch|-partition manifest probe — no full-index scan, and no
-    dependence on the caller still holding the indexed TEXT (the old
-    contract, which silently left stale postings behind if the
-    request text had drifted from the indexed version). Hit bucket
-    partitions are rewritten without the deleted ids (dynamic
-    partition overwrite; fully-emptied directories removed), the
-    manifest's hit id-partitions are rewritten the same way, and the
-    corpus stats retreat arithmetically from the manifest's per-doc
-    ``dl``. df self-corrects at query time (derived from the probed
-    lists). Returns documents removed. Extra columns on ``ids``
-    (e.g. the old text payload) are ignored."""
-    from mpg_data_warehouse_spark.operators.append import (
-        overwrite_partitions,
-    )
-
+    posting buckets, so the affected buckets are found with a
+    ≤|batch|-partition manifest probe — no full-index scan, and no
+    dependence on the caller still holding the indexed TEXT. The hit
+    buckets' posting files and the hit id-partitions' manifest files
+    are rewritten without the deleted ids, and the corpus stats retreat
+    arithmetically from the manifest's per-doc ``dl`` — all in one
+    commit. df self-corrects at query time (derived from the probed
+    lists). Returns documents removed. Extra columns on ``ids`` (e.g.
+    the old text payload) are ignored."""
     spark = ids.sparkSession
-    stats = read_json(os.path.join(path, STATS_FILE))
-    _check_n_buckets(None, stats.get("n_buckets"), path)
-    n_idb = int(stats.get("n_idb", N_IDB))
-    _require_manifest(path)
-    backend = get_storage_backend()
+    state = _snapshot(path)
+    stats = state["meta"]
 
-    del_ids = ids.select(id_col).distinct()
-    idbs = sorted(
+    del_ids = F.broadcast(ids.select(id_col).distinct())
+    idbs = [
         r["i"]
-        for r in del_ids.select(_idb(id_col, n_idb).alias("i"))
+        for r in del_ids.select(_idb(id_col, stats["n_idb"]).alias("i"))
         .distinct()
         .collect()
-    )
-    man_scoped = spark.read.parquet(_manifest_path(path)).filter(
-        F.col("idb").isin(idbs)
-    )
+    ]
+    man_scoped = _read(spark, path, state, "idb", idbs)
     # ONE job answers all three driver-side questions (victim count,
     # dl retreat, union of hit posting buckets) — collect_list of the
     # victims' bucket arrays, flattened and deduped as an expression
     gone_row = (
-        man_scoped.join(F.broadcast(del_ids), id_col, "left_semi")
+        man_scoped.join(del_ids, id_col, "left_semi")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum("dl").alias("s"),
@@ -1070,377 +762,80 @@ def bm25_delete_index(
     n_gone = int(gone_row["n"] or 0)
     if n_gone == 0:
         return 0
-    # union of the victims' posting buckets — ≤ N_BUCKETS values
-    buckets = sorted(gone_row["bs"] or [])
-
-    # The expensive phase of each leg — materializing the survivor
-    # sets (localCheckpoint, because their lineage READS the paths
-    # about to be rewritten) — is read-only and runs CONCURRENTLY
-    # (wall = max, not sum). The COMMITS are sequential and ordered:
-    # postings rewrite FIRST, manifest retreat SECOND, because the
-    # manifest is what a retry probes — in this order a crash between
-    # the commits leaves the victims still listed, so re-running the
-    # delete rewrites the (already-clean) buckets idempotently and
-    # completes the retreat; the reverse/concurrent order (r10 form)
-    # stranded deleted docs' postings forever: the retry saw n_gone=0
-    # and returned while BM25 queries kept surfacing the victims.
-    def _postings_prep():
-        if not buckets:
-            return None, set()
-        postings = spark.read.parquet(path)
-        scoped = postings.filter(F.col("bucket").isin(buckets))
-        survivors = scoped.join(
-            F.broadcast(del_ids), id_col, "left_anti"
-        ).select("term", id_col, "tf", "dl", "bucket").localCheckpoint()
-        kept = {
-            r["bucket"]
-            for r in survivors.select("bucket").distinct().collect()
-        }
-        return survivors, kept
-
-    def _manifest_prep():
-        man_survivors = man_scoped.join(
-            F.broadcast(del_ids), id_col, "left_anti"
-        ).localCheckpoint()
-        man_kept = {
-            r["idb"]
-            for r in man_survivors.select("idb").distinct().collect()
-        }
-        return man_survivors, man_kept
-
-    from mpg_data_warehouse_spark.concurrency import await_all
-
-    (survivors, kept), (man_survivors, man_kept) = await_all(
-        _postings_prep, _manifest_prep
+    buckets = gone_row["bs"] or []
+    # survivors read the files this commit removes; those stay on disk
+    # (only unreferenced), so the lineage needs no checkpoint
+    adds_p, adds_m = await_all(
+        lambda: _write(
+            _read(spark, path, state, "bucket", buckets).join(
+                del_ids, id_col, "left_anti"
+            ),
+            path,
+            "bucket",
+        ),
+        lambda: _write(
+            man_scoped.join(del_ids, id_col, "left_anti"), path, "idb"
+        ),
     )
-
-    if survivors is not None:
-        overwrite_partitions(spark, survivors, path, ("bucket",))
-        for b in buckets:
-            if b not in kept:
-                backend.delete_prefix(os.path.join(path, f"bucket={b}"))
-        # a wipe that removed every posting must leave the index readable
-        _ensure_readable(path, survivors.drop("bucket"))
-
-    overwrite_partitions(
-        spark, man_survivors, _manifest_path(path), ("idb",)
-    )
-    for i in idbs:
-        if i not in man_kept:
-            backend.delete_prefix(
-                os.path.join(_manifest_path(path), f"idb={i}")
-            )
-    _ensure_readable(
-        _manifest_path(path), man_survivors.drop("idb"), part_dir="idb=0"
-    )
-
-    old_sum = stats.get("dl_sum", stats["avgdl"] * stats["n_docs"])
     n_docs = stats["n_docs"] - n_gone
-    new_sum = old_sum - int(gone_row["s"] or 0)
-    stats.update(
-        {
-            "n_docs": n_docs,
-            "avgdl": (new_sum / n_docs) if n_docs else 0.0,
-            "dl_sum": new_sum,
-        }
+    dl_sum = stats["dl_sum"] - int(gone_row["s"] or 0)
+    _commit(
+        path,
+        state["version"],
+        "delete",
+        {**stats, "n_docs": n_docs, "dl_sum": dl_sum,
+         "avgdl": (dl_sum / n_docs) if n_docs else 0.0},
+        adds_p + adds_m,
+        _files(state, "bucket", buckets) + _files(state, "idb", idbs),
     )
-    write_json_atomic(os.path.join(path, STATS_FILE), stats)
     return n_gone
 
 
-def bm25_repair_index(
-    spark: SparkSession,
-    path: str,
-    id_col: str = "doc_id",
-) -> int:
-    """Scrub ORPHANED postings — rows whose id is absent from the
-    ``_docs`` manifest — and return how many documents were scrubbed.
-
-    Orphans are the one inconsistent state the append commit order can
-    leave: ``bm25_append_index`` commits postings FIRST and the
-    manifest (the replay guard) SECOND, so a crash between the two
-    leaves rows a blind retry would duplicate. Recovery contract:
-    run this once before retrying a crashed append — a clean index
-    answers with one manifest-vs-postings anti-join and returns 0.
-
-    Scale shape (r11): the append writes postings in ``append`` mode —
-    it only ever ADDS files — so a crashed append's rows live in files
-    containing NOTHING BUT that batch. Repair therefore classifies
-    each orphan-bearing file: a PURE file (every row orphaned) is
-    simply unlinked — no data rewrite at all, which matters because a
-    batch's terms hash across essentially every bucket, so the
-    previous rewrite-orphan-buckets form re-wrote nearly the whole
-    index for one crashed delivery. Only MIXED files (orphan and live
-    rows sharing a file — not producible by the append path, but
-    defended against) fall back to the bucket rewrite (dynamic
-    partition overwrite, survivors checkpointed first because their
-    lineage reads the path being rewritten). Stats are untouched
-    either way: they only ever count manifest-listed docs, and
-    orphans were never added to them."""
-    from mpg_data_warehouse_spark.operators.append import (
-        overwrite_partitions,
-    )
-    from mpg_data_warehouse_spark.sources.storage import uri_to_path
-
-    _require_manifest(path)
-    backend = get_storage_backend()
-    postings = spark.read.parquet(path)
-    man_ids = spark.read.parquet(_manifest_path(path)).select(id_col)
-    # The orphan detection is a postings-vs-manifest anti-join; left
-    # unhinted it shuffles BOTH sides, and the postings side is the
-    # whole index — the dominant cost of a repair pass (and the slot
-    # prices two passes). The manifest id column is ~8 B/doc, so up to
-    # a few million docs it broadcasts (≤ ~32 MB) and the anti-join
-    # becomes one shuffle-free pass over the postings scan. Past that
-    # the shuffle join is the right plan (a billion-doc manifest does
-    # not broadcast) — gate on the stats sidecar's exact doc count.
-    stats_path = os.path.join(path, STATS_FILE)
-    # The sidecar is an OPTIMIZER HINT here, not a correctness input —
-    # repair must still work on an index whose stats file is missing,
-    # truncated by the very crash being repaired, or malformed. Any
-    # read/parse failure (and a stats dict without n_docs) degrades to
-    # n_docs=None → no broadcast hint → the conservative shuffle join.
-    # Defaulting a missing key to 0 would FORCE broadcast of an
-    # arbitrarily large manifest — the unsafe direction (r12 ADVICE).
-    try:
-        n_docs = (
-            read_json(stats_path).get("n_docs")
-            if backend.exists(stats_path)
-            else None
-        )
-    except Exception:
-        n_docs = None
-    if not isinstance(n_docs, int):
-        n_docs = None
-    if n_docs is not None and n_docs <= 4_000_000:
-        man_ids = F.broadcast(man_ids)
-    rows = postings.select(
-        id_col, "bucket", F.input_file_name().alias("_f")
-    )
-    # orphan rows feed three aggregations (global distinct-doc count,
-    # per-file counts, mixed-file bucket list) — persist so the
-    # postings-vs-manifest anti-join runs once; the frame is empty on
-    # a clean index and batch-sized after a crash, never corpus-sized
-    orphans = rows.join(man_ids, id_col, "left_anti").persist()
-    try:
-        n_orphans = orphans.select(id_col).distinct().count()
-        if n_orphans == 0:
-            return 0
-        orph_rows = (
-            orphans.groupBy("_f")
-            .agg(F.count(F.lit(1)).alias("_orph"))
-            .collect()
-        )
-        # Keys on BOTH sides are normalized through uri_to_path (r11
-        # ADVICE): the per-file totals come from a DIFFERENT read
-        # (explicit leaf-file paths vs partition discovery), and any
-        # URI-rendering drift between the two input_file_name() calls
-        # would silently reclassify every pure file as mixed — the
-        # fast path dead with no error. The raw URIs are kept for the
-        # isin() filter below (it compares against the FIRST read's
-        # column values) and for the re-read paths.
-        raw_by_norm = {uri_to_path(r["_f"]): r["_f"] for r in orph_rows}
-        orph_counts = {
-            uri_to_path(r["_f"]): r["_orph"] for r in orph_rows
-        }
-        # total row counts scan ONLY the orphan-bearing files (a
-        # direct multi-path read — an input_file_name() filter on the
-        # full read is post-scan and would re-read the whole index)
-        totals = {
-            uri_to_path(r["_f"]): r["_tot"]
-            for r in spark.read.parquet(*sorted(raw_by_norm.values()))
-            .select(F.input_file_name().alias("_f"))
-            .groupBy("_f")
-            .agg(F.count(F.lit(1)).alias("_tot"))
-            .collect()
-        }
-        lost = sorted(set(orph_counts) - set(totals))
-        if lost:
-            # the totals read just re-listed these exact files — a
-            # miss means key normalization drifted; degrading to the
-            # near-full-index rewrite silently is worse than failing
-            raise RuntimeError(
-                "bm25_repair_index: orphan files missing from their "
-                f"own re-read (key normalization drift?): {lost[:3]}"
-            )
-        pure = sorted(
-            f for f, n in orph_counts.items() if n == totals[f]
-        )
-        pure_set = set(pure)
-        mixed = sorted(
-            raw_by_norm[f] for f in orph_counts if f not in pure_set
-        )
-        if mixed:
-            mixed_buckets = sorted(
-                r["bucket"]
-                for r in orphans.filter(F.col("_f").isin(mixed))
-                .select("bucket")
-                .distinct()
-                .collect()
-            )
-            survivors = (
-                postings.filter(F.col("bucket").isin(mixed_buckets))
-                .join(man_ids, id_col, "left_semi")
-                .select("term", id_col, "tf", "dl", "bucket")
-                .localCheckpoint()
-            )
-            kept = {
-                r["bucket"]
-                for r in survivors.select("bucket").distinct().collect()
-            }
-            overwrite_partitions(spark, survivors, path, ("bucket",))
-            # DEFENSIVE: a mixed file's live rows share its bucket (one
-            # dir per file), so every mixed bucket keeps ≥1 survivor and
-            # this loop is dead under the invariant — but if it ever
-            # broke, removing the then-empty dir is still the correct
-            # action (dynamic overwrite won't touch a bucket absent
-            # from survivors, which would otherwise leave orphans)
-            for b in mixed_buckets:
-                if b not in kept:
-                    backend.delete_prefix(
-                        os.path.join(path, f"bucket={b}")
-                    )
-        # pure files under a just-rewritten bucket are already gone
-        # (dynamic overwrite replaced the dir) — delete_file no-ops
-        for f in pure:
-            backend.delete_file(f)
-        # A crashed append can CREATE a bucket=N dir whose only files
-        # were pure orphans: after the unlink the empty hive dir would
-        # survive every repair and accumulate (r11 ADVICE). Remove a
-        # pure file's parent bucket dir once no Spark-VISIBLE file is
-        # left in it — hidden siblings (the local FS's .crc checksums)
-        # don't count as occupancy and are swept with the dir.
-        for d in sorted({os.path.dirname(f) for f in pure}):
-            visible = [
-                f
-                for f in backend.list_files(d)
-                if not os.path.basename(f).startswith((".", "_"))
-            ]
-            if os.path.basename(d).startswith("bucket=") and not visible:
-                backend.delete_prefix(d)
-    finally:
-        orphans.unpersist()
-    _ensure_readable(path, postings.drop("bucket"))
-    return n_orphans
-
-
-def _fragmented_partitions(
-    root: str, prefix: str, min_files: int
-) -> dict[int, int]:
-    """{partition value: parquet-file count} for hive partitions under
-    ``root`` (``prefix`` e.g. ``"bucket="``) holding ≥ ``min_files``
-    visible data files. Driver-side LISTING only — file counts are
-    filesystem metadata; compaction planning must not scan data."""
-    backend = get_storage_backend()
-    counts: dict[int, int] = {}
-    rootn = root.rstrip("/")
-    for f in backend.list_files(rootn):
-        rel = f[len(rootn):].lstrip("/")
-        parts = rel.split("/")
-        if any(p.startswith(("_", ".")) for p in parts[:-1]):
-            continue
-        base = parts[-1]
-        if base.startswith(("_", ".")) or not base.endswith(".parquet"):
-            continue
-        first = parts[0]
-        if first.startswith(prefix):
-            try:
-                v = int(first[len(prefix):])
-            except ValueError:
-                continue
-            counts[v] = counts.get(v, 0) + 1
-    return {v: n for v, n in counts.items() if n >= min_files}
-
-
-def bm25_compact_index(
-    spark: SparkSession,
-    path: str,
-    id_col: str = "doc_id",
-    min_files: int = 2,
-    rebuild_bloom: bool = True,
-) -> dict:
+def bm25_compact_index(spark: SparkSession, path: str) -> dict:
     """Maintenance compaction for an append-maintained ranked index —
     the counterpart of ``sources/maintenance.py::maintain_table`` for
-    the BM25 table (reference surface: the same periodic-maintenance
-    posture as `notebooks/update_gridVeg_survey_metadata.ipynb`'s
-    rebuild cadence). Each ``bm25_append_index`` batch appends its own
-    files into every bucket its terms hash to, so a bucket accumulates
-    one small file PER BATCH — small-file debt that grows scan/open
-    cost linearly in delivery count, the classic LSM write-amp
-    trade-off. Compaction rewrites every bucket holding ≥ ``min_files``
-    files into one clustered file (same for the ``_docs`` manifest's
-    id-hash partitions) and, by default, REBUILDS the Bloom sidecar at
-    target density from the live manifest — shedding the stale
-    superset bits deletes leave behind.
+    the BM25 table. Each append adds one file to every bucket and
+    id-partition it touches, so partitions accumulate one small file
+    PER BATCH — scan/open cost grows linearly in delivery count, the
+    classic LSM write-amp trade-off. Compaction rewrites every
+    partition of either set that holds two or more live files into one
+    file, in one commit that leaves the stats unchanged. Planning reads
+    only the add actions; only fragmented partitions are read. The
+    replaced files stay on disk for readers pinned to older versions
+    until ``txlog.vacuum`` collects them. Returns
+    ``{"buckets_compacted", "idbs_compacted", "files_merged"}``."""
+    from collections import Counter
 
-    Ordering/safety: runs ``bm25_repair_index`` FIRST — compacting an
-    index with crash-orphans would merge orphan rows into MIXED files,
-    demoting a later repair from the unlink fast path to the bucket
-    rewrite. After the scrub every rewrite is content-preserving, so a
-    crash at ANY point leaves a logically-identical index (partially
-    compacted layout at worst) and the operation is idempotent.
-    Planning is metadata-only (a driver-side file listing, never a
-    data scan); only fragmented partitions are read and rewritten.
-    Returns ``{"scrubbed", "buckets_compacted", "idbs_compacted",
-    "files_merged", "bloom_rebuilt"}``."""
-    from mpg_data_warehouse_spark.operators.append import (
-        overwrite_partitions,
-    )
-    from mpg_data_warehouse_spark.operators.bloom import (
-        DEFAULT_K,
-        bloom_build,
-    )
-
-    stats = read_json(os.path.join(path, STATS_FILE))
-    _check_n_buckets(None, stats.get("n_buckets"), path)
-    _require_manifest(path)
-
-    n_scrubbed = bm25_repair_index(spark, path, id_col)
-
-    frag_b = _fragmented_partitions(path, "bucket=", min_files)
-    files_merged = 0
-    if frag_b:
-        scoped = (
-            spark.read.parquet(path)
-            .filter(F.col("bucket").isin(sorted(frag_b)))
-            .select("term", id_col, "tf", "dl", "bucket")
-            # lineage reads the very files the rewrite replaces
-            .localCheckpoint()
+    state = _snapshot(path)
+    frag = {}
+    for part in _SETS:
+        n_files = Counter(
+            state["files"][p]["partition"][part] for p in _files(state, part)
         )
-        overwrite_partitions(spark, scoped, path, ("bucket",))
-        files_merged += sum(frag_b.values()) - len(frag_b)
-
-    man_path = _manifest_path(path)
-    frag_i = _fragmented_partitions(man_path, "idb=", min_files)
-    if frag_i:
-        man_scoped = (
-            spark.read.parquet(man_path)
-            .filter(F.col("idb").isin(sorted(frag_i)))
-            .localCheckpoint()
+        frag[part] = sorted(v for v, n in n_files.items() if n >= 2)
+    removes = _files(state, "bucket", frag["bucket"]) + _files(
+        state, "idb", frag["idb"]
+    )
+    if removes:
+        adds = await_all(
+            *[
+                lambda part=part: _write(
+                    _read(spark, path, state, part, frag[part]), path, part
+                )
+                for part in _SETS
+                if frag[part]
+            ]
         )
-        overwrite_partitions(spark, man_scoped, man_path, ("idb",))
-        files_merged += sum(frag_i.values()) - len(frag_i)
-
-    bloom_rebuilt = False
-    if rebuild_bloom:
-        n_docs = int(stats.get("n_docs", 0))
-        if n_docs >= _BLOOM_GUARD_MIN_DOCS:
-            ids = spark.read.parquet(man_path).select(id_col)
-            n_bits = _bloom_bits_for(n_docs)
-            _commit_manifest_bloom(
-                spark, path, bloom_build(ids, id_col, n_bits=n_bits),
-                n_bits, DEFAULT_K, 0,
-            )
-            bloom_rebuilt = True
-        else:
-            _invalidate_manifest_bloom(path)
-    # compaction holds no bloom lineage — the one safe place to sweep
-    # dirs left unreachable by pointer invalidations
-    _sweep_bloom_dirs(path)
+        _commit(
+            path,
+            state["version"],
+            "compact",
+            state["meta"],
+            [a for leg in adds for a in leg],
+            removes,
+        )
     return {
-        "scrubbed": n_scrubbed,
-        "buckets_compacted": len(frag_b),
-        "idbs_compacted": len(frag_i),
-        "files_merged": files_merged,
-        "bloom_rebuilt": bloom_rebuilt,
+        "buckets_compacted": len(frag["bucket"]),
+        "idbs_compacted": len(frag["idb"]),
+        "files_merged": len(removes) - len(frag["bucket"]) - len(frag["idb"]),
     }

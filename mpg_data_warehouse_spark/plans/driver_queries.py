@@ -1557,104 +1557,84 @@ def bm25_incremental_index_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     under external verification (operators/search.py): build over two
     thirds of the corpus, CRASH a partial first delivery (an
     SF-INVARIANT ~34-doc slice of the append batch — see the crash
-    comment below) between its two commits (postings durable, manifest
-    absent — the one inconsistent state the append commit order can
-    leave), repair with ``bm25_repair_index`` (must scrub exactly the
-    crashed slice; a second repair must answer 0), deliver the FULL
-    batch (an OVERLAPPING redelivery — repaired slice + fresh
-    remainder, the at-least-once shape the recovery contract makes
-    safe), REPLAY the same append (the _docs-manifest guard must add
-    zero documents), then delete every 7th document by bare id, and
-    score two queries. The oracle is plain BM25 over ``documents WHERE
+    comment below) by failing its index commit, check the index still
+    answers exactly as before the crash at the same version, deliver
+    the FULL batch (an OVERLAPPING blind retry — crashed slice + fresh
+    remainder, the at-least-once shape the atomic commit makes safe),
+    REPLAY the same append (the _docs-manifest guard must add zero
+    documents), then delete every 7th document by bare id, and score
+    two queries. The oracle is plain BM25 over ``documents WHERE
     doc_id % 7 <> 0`` — a fresh build over the final corpus state — so
-    the hash proves crash-repair-retry ≡ clean append, append ≡,
-    replay ≡ no-op, delete ≡ rebuild, and the exact-integer ``dl_sum``
-    stats arithmetic all at once. (An under-scrub leaves orphans the
-    retry's manifest guard cannot see and re-inserts → duplicated
-    postings break the hash; an over-scrub loses live postings →
-    missing scores break it. Reference surface: the rollback/recovery
-    lifecycle notebooks/update_gridVeg_survey_metadata.ipynb:1392-1402.)
+    the hash proves crash + retry ≡ clean append, append ≡, replay ≡
+    no-op, delete ≡ rebuild, and the exact-integer ``dl_sum`` stats
+    arithmetic all at once. (A crash that leaked the slice's postings
+    into the index would duplicate them on the retry and break the
+    hash. Reference surface: the rollback/recovery lifecycle
+    notebooks/update_gridVeg_survey_metadata.ipynb:1392-1402.)
     """
     import tempfile
 
-    from mpg_data_warehouse_spark.operators import search as _search
     from mpg_data_warehouse_spark.operators.search import (
         bm25_append_index,
         bm25_delete_index,
-        bm25_repair_index,
         bm25_search_many,
         build_ranked_index,
     )
-    from mpg_data_warehouse_spark.operators.text import norm_tokens
+    from mpg_data_warehouse_spark.sources import txlog
 
     # One materialization of the corpus feeds every lifecycle phase
-    # (build / crashed slice / orphan count / retry / delete ids) —
-    # unpersisted, each phase re-reads AND re-repartitions the parquet
-    # (~5 corpus scans per run). The slot is scoped, so the pin is
-    # released once the result materializes.
+    # (build / crashed slice / retry / delete ids) — unpersisted, each
+    # phase re-reads AND re-repartitions the parquet. The slot is
+    # scoped, so the pin is released once the result materializes.
     docs = _docs(spark, sf_dir).persist()
     idx = tempfile.mkdtemp(prefix="bm25_incr_contract_")
     build_ranked_index(docs.filter(F.col("doc_id") % 3 != 0), idx)
     batch = docs.filter(F.col("doc_id") % 3 == 0)
+    queries = ["table scan merge", "window join batch"]
 
     # ---- crash injection: run the REAL append on a PARTIAL first
-    # delivery and fail its manifest commit, leaving exactly the
-    # orphaned-postings state the repair op exists for. The crashed
-    # slice is SF-INVARIANT (r11 VERDICT 3: the crash semantics don't
-    # scale with the crashed batch's size, so the fold prices a fixed
-    # ~34-doc slice, not an O(corpus) partial append): doc_id < 500
-    # covers the whole corpus at the correctness SF (ids are 0..499
-    # at sf0.01 — behavior there is byte-identical to the unbounded
-    # form) and pins the slice to the same 34 documents at every
+    # delivery and fail its commit install through the injectable
+    # commit store — the process dies after the append wrote its data
+    # files. The crashed slice is SF-INVARIANT (the crash semantics
+    # don't scale with the crashed batch's size): doc_id < 500 covers
+    # the whole corpus at the correctness SF (ids are 0..499 at
+    # sf0.01) and pins the slice to the same 34 documents at every
     # larger SF. The final corpus state — and therefore the oracle
     # hash — never depends on which slice crashed.
-    # Monkeypatching the commit function beats hand-staging postings:
-    # the staged state can never drift from what the production code
-    # actually writes. The retry below then redelivers the FULL batch
-    # — an OVERLAPPING redelivery (repaired slice + fresh remainder),
-    # the exact at-least-once shape the recovery contract promises to
-    # make safe.
     class _InjectedCrash(Exception):
         pass
 
-    def _boom(*a, **k):
-        raise _InjectedCrash("injected crash before manifest commit")
+    class _FailingCommit(txlog.CommitBackend):
+        def put_if_absent(self, path: str, payload: str) -> bool:
+            raise _InjectedCrash("injected crash before the index commit")
 
     crashed = batch.filter(
         (F.col("doc_id") % 5 == 0) & (F.col("doc_id") < 500)
     )
-    real_write_manifest = _search._write_manifest
-    _search._write_manifest = _boom
+    version = txlog.latest_version(idx)
+    before = bm25_search_many(spark, idx, queries, k=10).collect()
+    prev = txlog.set_commit_backend(_FailingCommit())
     try:
         try:
             bm25_append_index(crashed, idx)
             raise AssertionError(
                 "crash injection never fired — the append no longer "
-                "routes its manifest commit through _write_manifest"
+                "installs its commit through the txlog commit store"
             )
         except _InjectedCrash:
             pass
     finally:
-        _search._write_manifest = real_write_manifest
-
-    # docs contributing ≥1 token — computed independently of the
-    # repair's own orphan count (norm_tokens already drops empty
-    # strings, so size > 0 is exactly the min_term_len=1 rule)
-    expected_orphans = crashed.filter(
-        F.size(norm_tokens("text")) > 0
-    ).count()
-    n_scrubbed = bm25_repair_index(spark, idx)
-    if n_scrubbed != expected_orphans:
+        txlog.set_commit_backend(prev)
+    after = bm25_search_many(spark, idx, queries, k=10).collect()
+    if txlog.latest_version(idx) != version or sorted(after) != sorted(
+        before
+    ):
         raise AssertionError(
-            f"bm25_repair_index scrubbed {n_scrubbed} docs, expected "
-            f"{expected_orphans} (the crashed batch)"
-        )
-    if bm25_repair_index(spark, idx) != 0:
-        raise AssertionError(
-            "bm25_repair_index found orphans in a just-repaired index"
+            "the crashed append changed the index: it must answer as "
+            "before the crash, at the same version"
         )
 
-    # the blind retry the repair contract promises is now safe
+    # the blind retry of the full batch
     bm25_append_index(batch, idx)
     # replayed delivery must be a no-op (a bare assert would vanish
     # under python -O and silently stop exercising the guard)
@@ -1667,9 +1647,7 @@ def bm25_incremental_index_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     bm25_delete_index(
         docs.filter(F.col("doc_id") % 7 == 0).select("doc_id"), idx
     )
-    return bm25_search_many(
-        spark, idx, ["table scan merge", "window join batch"], k=10
-    )
+    return bm25_search_many(spark, idx, queries, k=10)
 
 
 def _simhash_oracle_sql() -> str:
@@ -4890,12 +4868,12 @@ def txlog_merge_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def bm25_doc_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranked keyword search under external verification: build the
-    real BM25 index (term-hash-bucket postings + corpus stats
-    sidecar, operators/search.py::build_ranked_index) in a fresh temp
-    dir, then score two queries through the partition-pruned
+    real BM25 index (term-hash-bucket postings with the corpus stats
+    on their commit, operators/search.py::build_ranked_index) in a
+    fresh temp dir, then score two queries through the bucket-pruned
     bm25_search_many probe. The oracle recomputes Lucene/Robertson
     BM25 from the documents table directly — tf, df, doc length,
-    avgdl, idf, saturation — so the index build, the stats sidecar,
+    avgdl, idf, saturation — so the index build, the committed stats,
     the bucket-pruned probe, and the scoring algebra are all under
     the hash."""
     import tempfile

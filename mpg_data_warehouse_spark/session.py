@@ -13,6 +13,23 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_memory() -> str:
+    """Heap for the single local JVM: half the host's memory
+    (``/proc/meminfo`` MemTotal) in whole GiB, at least 1g and never
+    above 24g. A fixed 24g overcommits a smaller host; where MemTotal
+    cannot be read, 24g stays."""
+    try:
+        with open("/proc/meminfo") as fh:
+            total_kb = next(
+                int(line.split()[1])
+                for line in fh
+                if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "24g"
+    return f"{max(1, min(24, total_kb // 2 // 2**20))}g"
+
+
 def get_spark(
     app_name: str = "mpg_data_warehouse_spark",
     master: str | None = None,
@@ -35,12 +52,13 @@ def get_spark(
         # Heap for the single local JVM (driver + all executor threads
         # in local mode). The 1g Spark default OOMs past sf~0.5 with 32
         # concurrent tasks; on a cluster this maps to executor memory
-        # and is set by the deploy, not here. Only effective for the
-        # session that launches the JVM — later getOrCreate calls
-        # ignore it, which is the desired no-op.
+        # and is set by the deploy (SPARK_GRAFT_DRIVER_MEM), not here.
+        # Only effective for the session that launches the JVM — later
+        # getOrCreate calls ignore it, which is the desired no-op.
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+            or _default_driver_memory(),
         )
         # AQE: runtime shuffle-partition coalescing, skew-join splitting,
         # and dynamic broadcast conversion — essential at 100 TB where

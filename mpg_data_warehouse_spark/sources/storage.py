@@ -3,7 +3,7 @@
 The data plane (parquet part files, Avro blocks) is Spark's own
 Hadoop-filesystem story and needs no help here. What DOES need a
 seam is the engine's control plane: JSON sidecars (`_index_meta`,
-`_corpus_stats`, `_bloom_meta`), atomic directory installs
+`_bloom_meta`), atomic directory installs
 (truncate-replace, compaction, Avro staging swaps), and partition
 prefix deletes (index deletion/maintenance). Round 5 gave the
 transaction log a pluggable ``CommitBackend`` (``txlog.py:160``) —

@@ -130,7 +130,9 @@ def _newest_checkpoint_at_or_before(table: str, version: int) -> int | None:
 def snapshot_state(table: str, version: int | None = None) -> dict:
     """Replay the log to ``version`` (default: newest). Returns
     ``{"version": int, "files": {relpath: add_action}, "schema": ddl,
-    "partition_by": [...]}``. Replay cost is one checkpoint + the JSON
+    "partition_by": [...], "meta": dict | None}``. ``meta`` is the
+    newest commit ``meta`` at or before ``version`` (commits without
+    one carry it forward). Replay cost is one checkpoint + the JSON
     tail after it, never the full history."""
     head = latest_version(table)
     if head < 0:
@@ -143,6 +145,7 @@ def snapshot_state(table: str, version: int | None = None) -> dict:
     files: dict[str, dict] = {}
     schema = None
     partition_by: list[str] = []
+    meta = None
     start = 0
     cp = _newest_checkpoint_at_or_before(table, version)
     if cp is not None:
@@ -151,12 +154,14 @@ def snapshot_state(table: str, version: int | None = None) -> dict:
         files = dict(state["files"])
         schema = state["schema"]
         partition_by = state["partition_by"]
+        meta = state.get("meta")
         start = cp + 1
 
     for v in range(start, version + 1):
         commit = _read_commit(table, v)
         schema = commit.get("schema", schema)
         partition_by = commit.get("partition_by", partition_by)
+        meta = commit.get("meta", meta)
         for action in commit["actions"]:
             if "add" in action:
                 files[action["add"]["path"]] = action["add"]
@@ -167,6 +172,7 @@ def snapshot_state(table: str, version: int | None = None) -> dict:
         "files": files,
         "schema": schema,
         "partition_by": partition_by,
+        "meta": meta,
     }
 
 
@@ -266,6 +272,7 @@ def _try_commit(table: str, version: int, commit: dict) -> bool:
                     "files": state["files"],
                     "schema": state["schema"],
                     "partition_by": state["partition_by"],
+                    "meta": state["meta"],
                 }
             ),
         )
@@ -459,7 +466,7 @@ def create(
         raise FileExistsError(f"transaction log already exists at {table}")
     # validate BEFORE writing data files — a key-shadowing raise after
     # the write would orphan a full set of never-referenced files
-    reserved = {"op", "schema", "partition_by", "actions"}
+    reserved = {"op", "schema", "partition_by", "actions", "meta"}
     if extra_commit_meta:
         for k in reserved & extra_commit_meta.keys():
             raise ValueError(f"extra_commit_meta would shadow {k!r}")
@@ -484,6 +491,21 @@ def read(
 ) -> DataFrame:
     """Snapshot read; ``version`` pins time travel (VERSION AS OF)."""
     return _read_files(spark, table, snapshot_state(table, version))
+
+
+def read_subset(
+    spark: SparkSession,
+    table: str,
+    state: dict,
+    rel_paths: list[str],
+    schema: str,
+) -> DataFrame:
+    """Read ``rel_paths``, a subset of the live files of ``state`` (a
+    ``snapshot_state``), under ``schema``. Serves tables whose commits
+    hold more than one file set, each with its own schema (a ranked
+    index's postings and manifest): every read taken from one pinned
+    state sees the same version, and none lists a directory."""
+    return _read_files(spark, table, {**state, "schema": schema}, rel_paths)
 
 
 def _commit_retry(table: str, build_commit) -> int:

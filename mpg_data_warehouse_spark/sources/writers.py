@@ -366,8 +366,8 @@ def ensure_readable_partition_layout(
     ``bucket=0``) — a plain root file would conflict with later
     partitioned appends (Spark rejects mixed layouts), whereas an
     empty hive partition composes with them. ``template`` must carry
-    the non-partition columns only. Shared by the BM25/IVF index
-    maintenance paths."""
+    the non-partition columns only. Shared by the inverted-index build
+    and the IVF index maintenance paths."""
     import os
 
     from mpg_data_warehouse_spark.sources.storage import (

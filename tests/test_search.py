@@ -144,12 +144,12 @@ def test_bm25_matches_reference_formula(spark, tmp_path):
 
 
 def test_await_all_settles_every_leg_before_raising():
-    """_await_all must wait for EVERY leg before propagating the first
+    """await_all must wait for EVERY leg before propagating the first
     exception — a caller may clean up the paths the legs write to, so
     returning with a leg still running would race that cleanup."""
     import time
 
-    from mpg_data_warehouse_spark.operators.search import _await_all
+    from mpg_data_warehouse_spark.concurrency import await_all
 
     settled = []
 
@@ -161,47 +161,38 @@ def test_await_all_settles_every_leg_before_raising():
         raise ValueError("boom")
 
     with pytest.raises(ValueError, match="boom"):
-        _await_all(slow_ok, fast_boom)
+        await_all(slow_ok, fast_boom)
     assert settled == ["slow"]
 
 
 def test_build_rebuild_over_existing_index_leaves_no_stale_state(
     spark, tmp_path
 ):
-    """Rebuilding an index AT THE SAME PATH over a smaller corpus must
-    leave no stale bucket dirs, postings, manifest rows, or stats from
-    the previous (wider) build — pins the r10 explicit-pre-clean +
-    dynamic-overwrite build path (a dynamic overwrite alone would let
-    bucket dirs the new build doesn't touch survive)."""
-    from mpg_data_warehouse_spark.operators.search import (
-        bm25_search,
-        build_ranked_index,
-    )
+    """Rebuilding an index AT THE SAME PATH over a smaller corpus is one
+    commit that replaces every live file: no postings, manifest rows or
+    stats from the previous (wider) build stay visible."""
+    from mpg_data_warehouse_spark.operators import search as S
+    from mpg_data_warehouse_spark.sources import txlog
 
     docs = spark.createDataFrame(
         [Row(doc_id=d, text=f"term{d} shared word") for d in range(40)]
     )
     idx = str(tmp_path / "ridx")
-    build_ranked_index(docs, idx)
+    S.build_ranked_index(docs, idx)
     # rebuild over a 5-doc corpus at the same path
-    small = docs.filter("doc_id < 5")
-    build_ranked_index(small, idx)
-    # postings: only the 5 docs' terms survive
-    ids = {
-        r.doc_id
-        for r in spark.read.parquet(idx).select("doc_id").distinct().collect()
-    }
-    assert ids == set(range(5)), ids
-    # manifest: same
-    man = spark.read.parquet(os.path.join(idx, "_docs"))
-    assert {r.doc_id for r in man.select("doc_id").collect()} == set(range(5))
+    S.build_ranked_index(docs.filter("doc_id < 5"), idx)
+    state = txlog.snapshot_state(idx)
+    assert state["version"] == 1
+    for part in ("bucket", "idb"):
+        ids = {
+            r.doc_id
+            for r in S._read(spark, idx, state, part).select("doc_id").collect()
+        }
+        assert ids == set(range(5)), (part, ids)
     # a term only the old corpus had scores nothing
-    assert bm25_search(spark, idx, "term30", k=10).count() == 0
+    assert S.bm25_search(spark, idx, "term30", k=10).count() == 0
     # stats retreated with the rebuild
-    import json as _json
-
-    with open(os.path.join(idx, "_corpus_stats.json")) as fh:
-        assert _json.load(fh)["n_docs"] == 5
+    assert state["meta"]["n_docs"] == 5
 
 
 def test_bm25_rank_is_deterministic_and_k_capped(spark, tmp_path):
@@ -311,6 +302,7 @@ def test_bm25_append_replay_is_idempotent(spark, tmp_path):
         bm25_search,
         build_ranked_index,
     )
+    from mpg_data_warehouse_spark.sources import txlog
 
     idx = str(tmp_path / "idx")
     build_ranked_index(
@@ -318,8 +310,10 @@ def test_bm25_append_replay_is_idempotent(spark, tmp_path):
     )
     batch = spark.createDataFrame([Row(doc_id=2, text="alpha charlie")])
     assert bm25_append_index(batch, idx) == 1
-    # replayed delivery: same ids drop out, stats unchanged
+    assert txlog.latest_version(idx) == 1  # one version per change
+    # replayed delivery: same ids drop out, stats unchanged, no version
     assert bm25_append_index(batch, idx) == 0
+    assert txlog.latest_version(idx) == 1
     rows = bm25_search(spark, idx, "alpha").collect()
     assert {r.doc_id for r in rows} == {1, 2}
     assert len(rows) == 2
@@ -333,6 +327,7 @@ def test_bm25_delete_matches_rebuild_without_docs(spark, tmp_path):
         bm25_search,
         build_ranked_index,
     )
+    from mpg_data_warehouse_spark.sources import txlog
 
     all_docs = spark.createDataFrame(
         [
@@ -352,8 +347,10 @@ def test_bm25_delete_matches_rebuild_without_docs(spark, tmp_path):
         a = {(r.doc_id, r.score) for r in bm25_search(spark, idx, q).collect()}
         b = {(r.doc_id, r.score) for r in bm25_search(spark, ref, q).collect()}
         assert a == b, q
-    # replay: deleting again removes nothing
+    # replay: deleting again removes nothing and adds no version
+    assert txlog.latest_version(idx) == 1
     assert bm25_delete_index(victims, idx) == 0
+    assert txlog.latest_version(idx) == 1
 
 
 def test_bm25_delete_full_wipe_keeps_index_usable(spark, tmp_path):
@@ -437,27 +434,32 @@ def test_bm25_delete_by_bare_ids_no_text_needed(spark, tmp_path):
 
 
 def test_index_maintenance_requires_manifest(spark, tmp_path):
-    """A legacy index without the _docs manifest fails loudly instead
-    of guessing."""
+    """An index without a transaction log — the older layout of
+    postings, ``_docs`` manifest and JSON stats sidecar — fails loudly
+    instead of guessing."""
     import shutil
 
     from mpg_data_warehouse_spark.operators.search import (
-        DOCS_DIR,
         bm25_append_index,
         bm25_delete_index,
+        bm25_search,
         build_ranked_index,
     )
+    from mpg_data_warehouse_spark.sources import txlog
 
     idx = str(tmp_path / "idx")
     build_ranked_index(
         spark.createDataFrame([Row(doc_id=1, text="alpha")]), idx
     )
-    shutil.rmtree(os.path.join(idx, DOCS_DIR))
+    shutil.rmtree(os.path.join(idx, txlog.LOG_DIR))
     batch = spark.createDataFrame([Row(doc_id=2, text="bravo")])
-    with pytest.raises(ValueError, match="manifest"):
-        bm25_append_index(batch, idx)
-    with pytest.raises(ValueError, match="manifest"):
-        bm25_delete_index(batch, idx)
+    for call in (
+        lambda: bm25_append_index(batch, idx),
+        lambda: bm25_delete_index(batch, idx),
+        lambda: bm25_search(spark, idx, "alpha"),
+    ):
+        with pytest.raises(ValueError, match="rebuild with build_ranked"):
+            call()
 
 
 def test_capped_out_doc_still_in_manifest_and_deletable(spark, tmp_path):
@@ -466,11 +468,10 @@ def test_capped_out_doc_still_in_manifest_and_deletable(spark, tmp_path):
     (empty bucket set) so deletion by id retreats n_docs/avgdl
     correctly."""
     from mpg_data_warehouse_spark.operators.search import (
-        STATS_FILE,
         bm25_delete_index,
         build_ranked_index,
     )
-    from mpg_data_warehouse_spark.sources.storage import read_json
+    from mpg_data_warehouse_spark.sources import txlog
 
     docs = spark.createDataFrame(
         [
@@ -481,446 +482,55 @@ def test_capped_out_doc_still_in_manifest_and_deletable(spark, tmp_path):
     )
     idx = str(tmp_path / "idx")
     build_ranked_index(docs, idx, max_df=2)  # 'common' df=3 -> capped
-    stats = read_json(os.path.join(idx, STATS_FILE))
+    stats = txlog.snapshot_state(idx)["meta"]
     assert stats["n_docs"] == 3 and stats["dl_sum"] == 6
     # doc 1 deletable by bare id even though it has no postings
     assert bm25_delete_index(
         spark.createDataFrame([Row(doc_id=1)]), idx
     ) == 1
-    stats = read_json(os.path.join(idx, STATS_FILE))
+    stats = txlog.snapshot_state(idx)["meta"]
     assert stats["n_docs"] == 2 and stats["dl_sum"] == 4
 
 
-def test_bm25_repair_scrubs_orphans_from_crashed_append(
-    spark, tmp_path, monkeypatch
-):
-    """Crash-recovery contract for the append commit order (postings
-    first, manifest second): a crash between the two commits leaves
-    ORPHANED postings a blind retry would duplicate.
-    bm25_repair_index scrubs exactly those rows, after which the
-    retried append + search match a clean build over the union; a
-    clean index repairs to 0 and is untouched."""
-    from mpg_data_warehouse_spark.operators import search as S
+def _rows(df):
+    return sorted(tuple(r) for r in df.collect())
 
-    batch1 = spark.createDataFrame(
+
+def _topk(spark, idx, queries=("alpha", "charlie delta", "token7 golf")):
+    from mpg_data_warehouse_spark.operators.search import bm25_search_many
+
+    return _rows(bm25_search_many(spark, idx, list(queries), k=100))
+
+
+def _lifecycle_docs(spark):
+    words = ("alpha", "bravo", "charlie", "delta", "golf")
+    return spark.createDataFrame(
         [
-            Row(doc_id=1, text="alpha bravo charlie"),
-            Row(doc_id=2, text="alpha bravo echo"),
-        ]
-    )
-    batch2 = spark.createDataFrame(
-        [
-            Row(doc_id=3, text="charlie delta foxtrot"),
-            Row(doc_id=4, text="alpha alpha golf"),
-        ]
-    )
-    idx = str(tmp_path / "idx")
-    S.build_ranked_index(batch1, idx)
-
-    # repairing a CLEAN index is a no-op probe
-    assert S.bm25_repair_index(spark, idx) == 0
-
-    # simulate the crash window: postings commit, manifest write dies
-    real_write_manifest = S._write_manifest
-
-    def _boom(*a, **k):
-        raise RuntimeError("simulated crash before manifest commit")
-
-    monkeypatch.setattr(S, "_write_manifest", _boom)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        S.bm25_append_index(batch2, idx)
-    monkeypatch.setattr(S, "_write_manifest", real_write_manifest)
-
-    # batch2's postings are orphans: present in buckets, absent from
-    # the manifest — the repair finds and scrubs exactly those docs
-    assert S.bm25_repair_index(spark, idx) == 2
-    # the index is back to its pre-crash state; the retried delivery
-    # appends cleanly and scoring matches a one-shot build
-    assert S.bm25_append_index(batch2, idx) == 2
-    full = str(tmp_path / "full")
-    S.build_ranked_index(batch1.unionByName(batch2), full)
-    for q in ("alpha", "charlie delta", "golf"):
-        a = {
-            (r.doc_id, r.score)
-            for r in S.bm25_search(spark, idx, q).collect()
-        }
-        b = {
-            (r.doc_id, r.score)
-            for r in S.bm25_search(spark, full, q).collect()
-        }
-        assert a == b, q
-    # and the repaired+retried index is repair-clean again
-    assert S.bm25_repair_index(spark, idx) == 0
-
-
-def test_bm25_repair_mixed_file_falls_back_to_bucket_rewrite(
-    spark, tmp_path
-):
-    """The r11 repair fast path unlinks PURE orphan files (the only
-    state the append commit order can produce); a MIXED file — orphan
-    and live rows sharing one parquet file, not producible by append
-    but defended against — must route through the bucket rewrite and
-    keep every live row."""
-    import glob
-    import os as _os
-
-    from pyspark.sql import functions as F
-
-    from mpg_data_warehouse_spark.operators import search as S
-
-    docs = spark.createDataFrame(
-        [
-            Row(doc_id=1, text="alpha bravo charlie"),
-            Row(doc_id=2, text="alpha delta echo"),
-        ]
-    )
-    idx = str(tmp_path / "idx")
-    S.build_ranked_index(docs, idx)
-    before = {
-        (r.term, r.doc_id, r.tf)
-        for r in spark.read.parquet(idx).select("term", "doc_id", "tf")
-        .collect()
-    }
-
-    # hand-craft a MIXED file inside one existing bucket dir: one live
-    # row (doc 1, manifest-listed) + one orphan row (doc 99)
-    bucket_dir = sorted(glob.glob(_os.path.join(idx, "bucket=*")))[0]
-    bucket_id = int(bucket_dir.rsplit("=", 1)[1])
-    live_row = (
-        spark.read.parquet(idx)
-        .filter(F.col("bucket") == bucket_id)
-        .select("term", "doc_id", "tf", "dl")
-        .limit(1)
-    )
-    orphan_row = spark.createDataFrame(
-        [Row(term="zulu", doc_id=99, tf=1, dl=1)]
-    ).select(
-        F.col("term"),
-        F.col("doc_id").cast("long"),
-        F.col("tf").cast("long"),
-        F.col("dl").cast("long"),
-    )
-    staged = str(tmp_path / "mixedfile")
-    live_row.unionByName(orphan_row).coalesce(1).write.parquet(staged)
-    part = glob.glob(_os.path.join(staged, "part-*.parquet"))[0]
-    _os.rename(part, _os.path.join(bucket_dir, "part-mixed.parquet"))
-
-    # repair must scrub doc 99 only; the duplicated live row from the
-    # mixed file is manifest-listed and SURVIVES the bucket rewrite
-    assert S.bm25_repair_index(spark, idx) == 1
-    after_rows = spark.read.parquet(idx).select(
-        "term", "doc_id", "tf"
-    ).collect()
-    assert all(r.doc_id != 99 for r in after_rows)
-    # every original posting is still present (the rewrite lost none)
-    assert before <= {(r.term, r.doc_id, r.tf) for r in after_rows}
-    # and a second repair answers 0
-    assert S.bm25_repair_index(spark, idx) == 0
-
-
-def test_bm25_repair_removes_emptied_new_bucket_dirs(
-    spark, tmp_path, monkeypatch
-):
-    """r11 ADVICE: a crashed append can CREATE bucket dirs whose only
-    files are pure orphans; unlinking the files must also remove the
-    now-empty hive dirs, or they accumulate across repairs. Bucket
-    dirs that pre-existed the crash must survive untouched."""
-    import glob
-    import os as _os
-
-    from mpg_data_warehouse_spark.operators import search as S
-
-    base = spark.createDataFrame([Row(doc_id=1, text="alpha")])
-    idx = str(tmp_path / "idx")
-    # explicit wide layout: a 1-doc corpus leaves ~62 bucket dirs
-    # absent, so the crashed batch's terms create brand-new ones
-    S.build_ranked_index(base, idx, n_buckets=64)
-    dirs_before = set(glob.glob(_os.path.join(idx, "bucket=*")))
-
-    batch = spark.createDataFrame(
-        [
-            Row(
-                doc_id=2,
-                text="bravo charlie delta echo foxtrot golf hotel india",
-            )
+            Row(doc_id=i, text=f"{words[i % 5]} token{i} {words[i % 3]}")
+            for i in range(40)
         ]
     )
 
-    def _boom(*a, **k):
-        raise RuntimeError("simulated crash before manifest commit")
 
-    monkeypatch.setattr(S, "_write_manifest", _boom)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        S.bm25_append_index(batch, idx)
-    monkeypatch.undo()  # restore the real _write_manifest
-
-    new_dirs = (
-        set(glob.glob(_os.path.join(idx, "bucket=*"))) - dirs_before
-    )
-    # 8 distinct terms over 64 buckets: some land outside the 1-doc
-    # build's dirs (all-collide probability ~(|before|/64)^8 ≈ 0)
-    assert new_dirs
-    assert S.bm25_repair_index(spark, idx) == 1
-    assert (
-        set(glob.glob(_os.path.join(idx, "bucket=*"))) == dirs_before
-    )
-    assert S.bm25_repair_index(spark, idx) == 0
-
-
-def test_bm25_repair_degrades_on_bad_stats_sidecar(
-    spark, tmp_path, monkeypatch
-):
-    """The stats sidecar is only a broadcast HINT for the repair
-    anti-join — repair must survive the sidecar being malformed
-    (possibly truncated by the very crash being repaired) or missing
-    its n_docs key, degrading to the conservative shuffle join rather
-    than crashing or force-broadcasting an unbounded manifest (r12
-    ADVICE)."""
-    import os
-
-    from mpg_data_warehouse_spark.operators import search as S
-
-    batch1 = spark.createDataFrame(
-        [
-            Row(doc_id=1, text="alpha bravo charlie"),
-            Row(doc_id=2, text="alpha bravo echo"),
-        ]
-    )
-    batch2 = spark.createDataFrame(
-        [Row(doc_id=3, text="charlie delta foxtrot")]
-    )
-    idx = str(tmp_path / "idx")
-    S.build_ranked_index(batch1, idx)
-    real_write_manifest = S._write_manifest
-    monkeypatch.setattr(
-        S, "_write_manifest",
-        lambda *a, **k: (_ for _ in ()).throw(RuntimeError("crash")),
-    )
-    with pytest.raises(RuntimeError, match="crash"):
-        S.bm25_append_index(batch2, idx)
-    monkeypatch.setattr(S, "_write_manifest", real_write_manifest)
-
-    stats_path = os.path.join(idx, S.STATS_FILE)
-    with open(stats_path) as fh:
-        good_stats = fh.read()
-
-    # malformed JSON (a crash-truncated write) — repair still scrubs
-    with open(stats_path, "w") as fh:
-        fh.write(good_stats[: len(good_stats) // 2])
-    assert S.bm25_repair_index(spark, idx) == 1
-
-    # append (unlike repair) REQUIRES a readable sidecar — restore it
-    # before provoking the next crash
-    with open(stats_path, "w") as fh:
-        fh.write(good_stats)
-
-    # re-crash, then repair with the n_docs key absent — must not
-    # force-broadcast (n_docs would otherwise default to 0) nor raise
-    monkeypatch.setattr(
-        S, "_write_manifest",
-        lambda *a, **k: (_ for _ in ()).throw(RuntimeError("crash")),
-    )
-    with pytest.raises(RuntimeError, match="crash"):
-        S.bm25_append_index(batch2, idx)
-    monkeypatch.setattr(S, "_write_manifest", real_write_manifest)
-    with open(stats_path, "w") as fh:
-        fh.write('{"avgdl": 3.0, "dl_sum": 9.0}')
-    assert S.bm25_repair_index(spark, idx) == 1
-
-    # restore the true sidecar; retried append + search still correct
-    with open(stats_path, "w") as fh:
-        fh.write(good_stats)
-    assert S.bm25_append_index(batch2, idx) == 1
-    got = {r.doc_id for r in S.bm25_search(spark, idx, "charlie").collect()}
-    assert got == {1, 3}
-
-
-# ---------------------------------------------------------------------------
-# Manifest Bloom sidecar (r13)
-# ---------------------------------------------------------------------------
-
-
-def _bloom_superset_holds(spark, idx):
-    """Every manifest id must probe maybe_seen=True (the no-false-
-    negative superset invariant the replay guard's safety rests on)."""
-    from mpg_data_warehouse_spark.operators import search as S
-    from mpg_data_warehouse_spark.operators.bloom import bloom_maybe_seen
-
-    bloom, ptr = S._read_manifest_bloom(spark, idx)
-    assert bloom is not None, "sidecar unreadable"
-    man = spark.read.parquet(S._manifest_path(idx)).select("doc_id")
-    probed = bloom_maybe_seen(
-        man, "doc_id", bloom, n_bits=ptr["n_bits"], k=ptr["k"],
-        seed=ptr["seed"],
-    )
-    return probed.filter(~F.col("maybe_seen")).count() == 0
-
-
-def test_bm25_bloom_sidecar_seeded_and_superset(spark, tmp_path, monkeypatch):
-    """build_ranked_index seeds the sidecar; append and delete keep
-    the superset invariant (delete shrinks the manifest only)."""
-    from mpg_data_warehouse_spark.operators import search as S
-
-    monkeypatch.setattr(S, "_BLOOM_GUARD_MIN_DOCS", 0)
-    docs = spark.createDataFrame(
-        [Row(doc_id=i, text=f"alpha token{i} bravo") for i in range(40)]
-    )
-    idx = str(tmp_path / "idx")
-    S.build_ranked_index(docs.filter("doc_id < 25"), idx)
-    assert _bloom_superset_holds(spark, idx)
-    assert S.bm25_append_index(docs.filter("doc_id >= 25"), idx) == 15
-    assert _bloom_superset_holds(spark, idx)
-    S.bm25_delete_index(
-        docs.filter("doc_id % 4 = 0").select("doc_id"), idx
-    )
-    assert _bloom_superset_holds(spark, idx)
-    # replay guard still EXACT through the two-tier path: the deleted
-    # ids (28/32/36 of this batch) are maybe_seen in the stale-superset
-    # bloom, but the exact tier sees they left the manifest and lets
-    # them re-append; the 12 still-indexed docs are dropped
-    assert S.bm25_append_index(docs.filter("doc_id >= 25"), idx) == 3
-
-
-def test_bm25_all_new_append_reads_no_manifest_partitions(
-    spark, tmp_path, monkeypatch
-):
-    """The sidecar's reason to exist: a fully-fresh batch must clear
-    the replay guard from the Bloom probe alone — ZERO manifest IO.
-    Proven by making any manifest read IMPOSSIBLE (the _docs parquet
-    files are removed, directory kept) and appending an all-new
-    batch: the two-tier guard succeeds; the r10 exact guard would
-    have had to read the now-empty manifest."""
-    import os
-    import shutil
-
-    from mpg_data_warehouse_spark.operators import search as S
-
-    monkeypatch.setattr(S, "_BLOOM_GUARD_MIN_DOCS", 0)
-    docs = spark.createDataFrame(
-        [Row(doc_id=i, text=f"alpha token{i} bravo") for i in range(30)]
-    )
-    idx = str(tmp_path / "idx")
-    S.build_ranked_index(docs.filter("doc_id < 20"), idx)
-    man = S._manifest_path(idx)
-    for entry in os.listdir(man):
-        p = os.path.join(man, entry)
-        shutil.rmtree(p) if os.path.isdir(p) else os.remove(p)
-    assert S.bm25_append_index(docs.filter("doc_id >= 20"), idx) == 10
-
-
-def test_bm25_bloom_corrupt_pointer_falls_back_and_self_heals(
-    spark, tmp_path, monkeypatch
-):
-    """A torn/garbage pointer degrades the guard to the exact
-    anti-join (append still correct) and the append's own sidecar
-    commit REPLACES the broken pointer — the next append is two-tier
-    again."""
-    import os
-
-    from mpg_data_warehouse_spark.operators import search as S
-
-    monkeypatch.setattr(S, "_BLOOM_GUARD_MIN_DOCS", 0)
-    docs = spark.createDataFrame(
-        [Row(doc_id=i, text=f"alpha token{i} bravo") for i in range(30)]
-    )
-    idx = str(tmp_path / "idx")
-    S.build_ranked_index(docs.filter("doc_id < 20"), idx)
-    with open(os.path.join(idx, S.BLOOM_PTR_FILE), "w") as fh:
-        fh.write('{"dir": "_docs_bloom_v1", "n_bits": "garbage"')
-    assert S._read_manifest_bloom(spark, idx) == (None, None)
-    assert S.bm25_append_index(docs.filter("doc_id >= 20"), idx) == 10
-    bloom, ptr = S._read_manifest_bloom(spark, idx)
-    assert bloom is not None and isinstance(ptr["n_bits"], int)
-    assert _bloom_superset_holds(spark, idx)
-    # the healed sidecar drives the guard again: full replay is a noop
-    assert S.bm25_append_index(docs, idx) == 0
-
-
-def test_bm25_bloom_resizes_when_capacity_exceeded(
-    spark, tmp_path, monkeypatch
-):
-    """Growth past _BLOOM_MAX_BITS_PER_KEY density rebuilds the filter
-    at the target density (amortized doubling); the rebuilt filter
-    still covers every manifest id."""
-    from mpg_data_warehouse_spark.operators import search as S
-
-    monkeypatch.setattr(S, "_BLOOM_GUARD_MIN_DOCS", 0)
-    monkeypatch.setattr(S, "_BLOOM_MIN_BITS", 256)
-    docs = spark.createDataFrame(
-        [Row(doc_id=i, text=f"alpha token{i} bravo") for i in range(120)]
-    )
-    idx = str(tmp_path / "idx")
-    S.build_ranked_index(docs.filter("doc_id < 10"), idx)
-    _, ptr0 = S._read_manifest_bloom(spark, idx)
-    assert ptr0["n_bits"] == 256  # 10 docs * 16 bits -> floor
-    # 110 more docs: 120 * 10 > 256 forces the rebuild branch
-    assert S.bm25_append_index(docs.filter("doc_id >= 10"), idx) == 110
-    _, ptr1 = S._read_manifest_bloom(spark, idx)
-    assert ptr1["n_bits"] >= 120 * S._BLOOM_TARGET_BITS_PER_KEY
-    assert _bloom_superset_holds(spark, idx)
-    assert S.bm25_append_index(docs, idx) == 0
-
-
-def test_bm25_crash_between_bloom_and_manifest_keeps_contract(
-    spark, tmp_path, monkeypatch
-):
-    """The new commit order (postings -> bloom -> manifest) under the
-    injected crash: the bloom holds orphan ids (superset — safe), the
-    repair-then-retry contract still converges to the clean-build
-    state, and the sidecar stays a superset of the final manifest."""
-    from mpg_data_warehouse_spark.operators import search as S
-
-    b1 = spark.createDataFrame(
-        [Row(doc_id=i, text=f"alpha token{i} bravo") for i in range(20)]
-    )
-    b2 = spark.createDataFrame(
-        [Row(doc_id=i, text=f"charlie token{i} delta") for i in range(20, 35)]
-    )
-    idx = str(tmp_path / "idx")
-    monkeypatch.setattr(S, "_BLOOM_GUARD_MIN_DOCS", 0)
-    S.build_ranked_index(b1, idx)
-    real = S._write_manifest
-    monkeypatch.setattr(
-        S, "_write_manifest",
-        lambda *a, **k: (_ for _ in ()).throw(RuntimeError("crash")),
-    )
-    with pytest.raises(RuntimeError, match="crash"):
-        S.bm25_append_index(b2, idx)
-    monkeypatch.setattr(S, "_write_manifest", real)
-    # crashed ids live in the bloom but not the manifest — the
-    # superset direction; the guard must therefore exact-check them
-    assert _bloom_superset_holds(spark, idx)
-    assert S.bm25_repair_index(spark, idx) == 15
-    assert S.bm25_append_index(b2, idx) == 15
-    assert _bloom_superset_holds(spark, idx)
-    full = str(tmp_path / "full")
-    S.build_ranked_index(b1.unionByName(b2), full)
-    for q in ("alpha", "charlie token22"):
-        a = {
-            (r.doc_id, r.score)
-            for r in S.bm25_search(spark, idx, q).collect()
-        }
-        b = {
-            (r.doc_id, r.score)
-            for r in S.bm25_search(spark, full, q).collect()
-        }
-        assert a == b, q
-
-
-def test_bm25_compact_index_merges_files_preserves_results(
-    spark, tmp_path, monkeypatch
-):
-    """Three appends leave one file per batch per touched partition;
+def test_bm25_compact_index_merges_files_preserves_results(spark, tmp_path):
+    """Two appends leave one file per batch per touched partition;
     compaction merges each fragmented bucket/idb partition to ONE
-    file, preserves search results and stats byte-for-byte, keeps the
-    replay guard exact, and is idempotent (second run finds nothing
-    fragmented)."""
-    import json as _json
-    import os
+    file in one commit, preserves search results and stats exactly,
+    keeps the replay guard exact, and is idempotent (a second run
+    finds nothing fragmented and adds no version)."""
+    from collections import Counter
 
     from mpg_data_warehouse_spark.operators import search as S
+    from mpg_data_warehouse_spark.sources import txlog
 
-    monkeypatch.setattr(S, "_BLOOM_GUARD_MIN_DOCS", 0)
+    def fragmented(part):
+        state = txlog.snapshot_state(idx)
+        n = Counter(
+            state["files"][p]["partition"][part]
+            for p in S._files(state, part)
+        )
+        return {v for v, c in n.items() if c >= 2}
+
     docs = spark.createDataFrame(
         [Row(doc_id=i, text=f"alpha shared token{i}") for i in range(60)]
     )
@@ -928,131 +538,129 @@ def test_bm25_compact_index_merges_files_preserves_results(
     S.build_ranked_index(docs.filter("doc_id < 30"), idx)
     S.bm25_append_index(docs.filter("doc_id >= 30 and doc_id < 45"), idx)
     S.bm25_append_index(docs.filter("doc_id >= 45"), idx)
-    assert S._fragmented_partitions(idx, "bucket=", 2)  # debt exists
+    assert fragmented("bucket") and fragmented("idb")  # debt exists
 
-    before = sorted(
-        (r.doc_id, r.score)
-        for r in S.bm25_search(spark, idx, "alpha shared", k=100).collect()
-    )
-    with open(os.path.join(idx, S.STATS_FILE)) as fh:
-        stats_before = _json.load(fh)
-
+    before = _topk(spark, idx, ["alpha shared", "token7"])
+    state = txlog.snapshot_state(idx)
     rep = S.bm25_compact_index(spark, idx)
-    assert rep["scrubbed"] == 0 and rep["buckets_compacted"] > 0
-    assert rep["files_merged"] > 0 and rep["bloom_rebuilt"]
-    assert not S._fragmented_partitions(idx, "bucket=", 2)
-    assert not S._fragmented_partitions(S._manifest_path(idx), "idb=", 2)
-
-    after = sorted(
-        (r.doc_id, r.score)
-        for r in S.bm25_search(spark, idx, "alpha shared", k=100).collect()
-    )
-    assert before == after
-    with open(os.path.join(idx, S.STATS_FILE)) as fh:
-        assert _json.load(fh) == stats_before
-    assert _bloom_superset_holds(spark, idx)
+    assert rep["buckets_compacted"] > 0 and rep["idbs_compacted"] > 0
+    assert rep["files_merged"] > 0
+    assert not fragmented("bucket") and not fragmented("idb")
+    after = txlog.snapshot_state(idx)
+    assert after["version"] == state["version"] + 1
+    assert after["meta"] == state["meta"]
+    assert _topk(spark, idx, ["alpha shared", "token7"]) == before
     # replay guard still exact after the layout rewrite
     assert S.bm25_append_index(docs, idx) == 0
     # idempotent
     rep2 = S.bm25_compact_index(spark, idx)
     assert rep2["buckets_compacted"] == 0 and rep2["files_merged"] == 0
+    assert txlog.latest_version(idx) == after["version"]
 
 
-def test_bm25_compact_index_scrubs_orphans_first(
-    spark, tmp_path, monkeypatch
+class _InjectedCrash(Exception):
+    pass
+
+
+class _FailingCommitBackend:
+    """A commit store whose every install fails (the process dies
+    before the commit object lands)."""
+
+    def put_if_absent(self, path, payload):
+        raise _InjectedCrash(f"commit install of {path}")
+
+
+@pytest.mark.parametrize("fault", ["data_write", "commit_install"])
+@pytest.mark.parametrize("op", ["rebuild", "append", "delete", "compact"])
+def test_bm25_fault_leaves_index_whole_and_blind_retry_converges(
+    spark, tmp_path, monkeypatch, op, fault
 ):
-    """Compacting a crashed index must not merge orphans into mixed
-    files (that would demote later repair to the rewrite path) — the
-    repair scrub runs first, and the compacted index converges to the
-    clean-build state after the retry."""
+    """A fault at either commit point of any index change — after the
+    change's data files are written, or while its commit installs —
+    leaves the index answering exactly as before at the same version.
+    A blind retry of the same call then adds one version and answers
+    like a fresh build over the resulting corpus."""
     from mpg_data_warehouse_spark.operators import search as S
+    from mpg_data_warehouse_spark.sources import txlog
 
-    b1 = spark.createDataFrame(
-        [Row(doc_id=i, text=f"alpha token{i}") for i in range(20)]
-    )
-    b2 = spark.createDataFrame(
-        [Row(doc_id=i, text=f"bravo token{i}") for i in range(20, 30)]
-    )
-    idx = str(tmp_path / "idx")
-    S.build_ranked_index(b1, idx)
-    monkeypatch.setattr(
-        S, "_write_manifest",
-        lambda *a, **k: (_ for _ in ()).throw(RuntimeError("crash")),
-    )
-    with pytest.raises(RuntimeError, match="crash"):
-        S.bm25_append_index(b2, idx)
-    monkeypatch.undo()
-    rep = S.bm25_compact_index(spark, idx)
-    assert rep["scrubbed"] == 10
-    assert S.bm25_append_index(b2, idx) == 10
-    full = str(tmp_path / "full")
-    S.build_ranked_index(b1.unionByName(b2), full)
-    for q in ("alpha", "bravo token22"):
-        a = {
-            (r.doc_id, r.score)
-            for r in S.bm25_search(spark, idx, q).collect()
-        }
-        b = {
-            (r.doc_id, r.score)
-            for r in S.bm25_search(spark, full, q).collect()
-        }
-        assert a == b, q
-
-
-def test_bm25_bloom_gated_off_below_min_docs(spark, tmp_path):
-    """At the DEFAULT threshold a toy corpus carries no sidecar at all
-    — build seeds nothing, appends maintain nothing (zero bloom
-    overhead at bench scale), and the guard runs the exact path."""
-    import os
-
-    from mpg_data_warehouse_spark.operators import search as S
-
-    docs = spark.createDataFrame(
-        [Row(doc_id=i, text=f"alpha token{i}") for i in range(30)]
-    )
+    docs = _lifecycle_docs(spark)
     idx = str(tmp_path / "idx")
     S.build_ranked_index(docs.filter("doc_id < 20"), idx)
-    assert not os.path.exists(os.path.join(idx, S.BLOOM_PTR_FILE))
-    assert S.bm25_append_index(docs.filter("doc_id >= 20"), idx) == 10
-    assert not os.path.exists(os.path.join(idx, S.BLOOM_PTR_FILE))
-    assert S.bm25_append_index(docs, idx) == 0  # exact guard works
+    S.bm25_append_index(docs.filter("doc_id >= 20 and doc_id < 30"), idx)
+    change, final = {
+        "rebuild": (
+            lambda: S.build_ranked_index(docs.filter("doc_id < 35"), idx),
+            docs.filter("doc_id < 35"),
+        ),
+        # an overlapping redelivery: ids 25..29 are already indexed
+        "append": (
+            lambda: S.bm25_append_index(docs.filter("doc_id >= 25"), idx),
+            docs,
+        ),
+        "delete": (
+            lambda: S.bm25_delete_index(docs.filter("doc_id % 3 = 0"), idx),
+            docs.filter("doc_id < 30 and doc_id % 3 != 0"),
+        ),
+        "compact": (
+            lambda: S.bm25_compact_index(spark, idx),
+            docs.filter("doc_id < 30"),
+        ),
+    }[op]
+    before, version = _topk(spark, idx), txlog.latest_version(idx)
+
+    if fault == "commit_install":
+        prev = txlog.set_commit_backend(_FailingCommitBackend())
+        try:
+            with pytest.raises(_InjectedCrash):
+                change()
+        finally:
+            txlog.set_commit_backend(prev)
+    else:
+        real_write = txlog._write_data_files
+
+        def write_then_die(*a, **k):
+            real_write(*a, **k)
+            raise _InjectedCrash("after writing data files")
+
+        monkeypatch.setattr(txlog, "_write_data_files", write_then_die)
+        with pytest.raises(_InjectedCrash):
+            change()
+        monkeypatch.undo()
+
+    assert txlog.latest_version(idx) == version
+    assert _topk(spark, idx) == before
+    change()
+    assert txlog.latest_version(idx) == version + 1
+    fresh = str(tmp_path / "fresh")
+    S.build_ranked_index(final, fresh)
+    assert _topk(spark, idx) == _topk(spark, fresh)
 
 
-def test_bm25_bloom_invalidated_when_corpus_shrinks_below_threshold(
-    spark, tmp_path, monkeypatch
+def test_bm25_search_planned_before_a_change_answers_from_its_version(
+    spark, tmp_path
 ):
-    """A sidecar that stops being maintained must stop EXISTING: when
-    the corpus falls under the threshold, the next append removes the
-    pointer (a skipped refresh would leave a subset filter — false
-    negatives re-insert delivered docs). Compaction then sweeps the
-    unreachable dirs."""
-    import os
-
+    """A search frame pins the index version it was planned on: planned
+    before an append or a compaction and collected after it, it returns
+    the top-k from before the change — never new postings scored with
+    old stats, and never a read of files the change replaced."""
     from mpg_data_warehouse_spark.operators import search as S
 
-    docs = spark.createDataFrame(
-        [Row(doc_id=i, text=f"alpha token{i}") for i in range(40)]
-    )
+    docs = _lifecycle_docs(spark)
     idx = str(tmp_path / "idx")
-    monkeypatch.setattr(S, "_BLOOM_GUARD_MIN_DOCS", 0)
+    queries = ["alpha token25", "charlie delta"]
     S.build_ranked_index(docs.filter("doc_id < 20"), idx)
-    assert os.path.exists(os.path.join(idx, S.BLOOM_PTR_FILE))
-    # threshold rises above the corpus (the shrink case, inverted for
-    # test economy): the next append invalidates instead of refreshing
-    monkeypatch.setattr(S, "_BLOOM_GUARD_MIN_DOCS", 10_000)
+
+    want = _rows(S.bm25_search_many(spark, idx, queries, k=5))
+    planned = S.bm25_search_many(spark, idx, queries, k=5)
     assert S.bm25_append_index(docs.filter("doc_id >= 20"), idx) == 20
-    assert not os.path.exists(os.path.join(idx, S.BLOOM_PTR_FILE))
-    # guard stays exact without the sidecar
-    assert S.bm25_append_index(docs, idx) == 0
-    # filter dirs linger (append-time deletion would break in-flight
-    # lineage) until compaction sweeps them
-    assert any(
-        d.startswith("_docs_bloom_v") for d in os.listdir(idx)
-    )
-    S.bm25_compact_index(spark, idx)
-    assert not any(
-        d.startswith("_docs_bloom_v") for d in os.listdir(idx)
-    )
+    assert _rows(planned) == want
+    # a frame planned after the append does see it
+    assert _rows(S.bm25_search_many(spark, idx, queries, k=5)) != want
+
+    want = _rows(S.bm25_search_many(spark, idx, queries, k=5))
+    planned = S.bm25_search_many(spark, idx, queries, k=5)
+    assert S.bm25_compact_index(spark, idx)["files_merged"] > 0
+    assert _rows(planned) == want
 
 
 def test_term_bucket_py_matches_spark(spark):

@@ -78,38 +78,60 @@ def test_default_backend_is_local(spark):
 def test_bm25_lifecycle_routes_all_sidecars_through_backend(
     spark, tmp_path, fake_backend
 ):
-    """build → search → append → delete with in-memory-only sidecars:
-    if any module still read/wrote _corpus_stats/_index_meta with
-    open(), the on-disk file would be missing (write) or stale
-    (read) and this test would fail."""
+    """build → append → delete installs every index change as one
+    commit through the injected ``CommitBackend``, and writes no JSON
+    sidecar anywhere under the index path: the stats ride the commits,
+    so there is no control object outside the log to route."""
     from mpg_data_warehouse_spark.operators.search import (
-        STATS_FILE,
         bm25_append_index,
         bm25_delete_index,
         bm25_search,
         build_ranked_index,
     )
+    from mpg_data_warehouse_spark.sources import txlog
 
-    idx = str(tmp_path / "idx")
-    build_ranked_index(
-        spark.createDataFrame(
-            [Row(doc_id=1, text="alpha bravo"), Row(doc_id=2, text="alpha c")]
-        ),
-        idx,
-    )
-    stats_path = os.path.join(idx, STATS_FILE)
-    assert stats_path in fake_backend.texts  # sidecar in memory…
-    assert not os.path.exists(stats_path)  # …and nowhere on disk
-    assert bm25_search(spark, idx, "alpha").count() == 2
-    assert bm25_append_index(
-        spark.createDataFrame([Row(doc_id=3, text="alpha delta")]), idx
-    ) == 1
-    assert bm25_delete_index(
-        spark.createDataFrame([Row(doc_id=1)]), idx
-    ) == 1
+    class RecordingCommits(txlog.LocalFSCommitBackend):
+        def __init__(self):
+            self.installed: list[str] = []
+
+        def put_if_absent(self, path: str, payload: str) -> bool:
+            self.installed.append(path)
+            return super().put_if_absent(path, payload)
+
+    commits = RecordingCommits()
+    prev = txlog.set_commit_backend(commits)
+    try:
+        idx = str(tmp_path / "idx")
+        build_ranked_index(
+            spark.createDataFrame(
+                [Row(doc_id=1, text="alpha bravo"), Row(doc_id=2, text="alpha c")]
+            ),
+            idx,
+        )
+        assert bm25_search(spark, idx, "alpha").count() == 2
+        assert bm25_append_index(
+            spark.createDataFrame([Row(doc_id=3, text="alpha delta")]), idx
+        ) == 1
+        assert bm25_delete_index(
+            spark.createDataFrame([Row(doc_id=1)]), idx
+        ) == 1
+    finally:
+        txlog.set_commit_backend(prev)
     got = {r.doc_id for r in bm25_search(spark, idx, "alpha").collect()}
     assert got == {2, 3}
-    assert '"n_docs": 2' in fake_backend.texts[stats_path]
+    log = os.path.join(idx, txlog.LOG_DIR)
+    assert commits.installed == [
+        os.path.join(log, f"{v:08d}.json") for v in range(3)
+    ]
+    assert txlog.snapshot_state(idx)["meta"]["n_docs"] == 2
+    on_disk = {
+        os.path.join(d, f)
+        for d, _, files in os.walk(idx)
+        for f in files
+        if f.endswith(".json")
+    }
+    assert on_disk == set(commits.installed)
+    assert not fake_backend.texts  # no sidecar went around the log either
 
 
 def test_bloom_sidecars_route_through_backend(spark, tmp_path, fake_backend):

@@ -233,6 +233,38 @@ def test_checkpoint_bounds_replay(spark, tmp_path):
     assert txlog.read(spark, t, version=2).count() == 3
 
 
+def test_commit_meta_survives_checkpoint_and_time_travel(spark, tmp_path):
+    """A commit's ``meta`` is carried forward by commits without one,
+    written into the checkpoint, and pinned by time travel. The commits
+    before the checkpoint are deleted after it is written, so the
+    newest versions can only get their ``meta`` through it."""
+    t = str(tmp_path / "t")
+    txlog.create(spark, t, _mk(spark, [0]))
+    head = txlog.CHECKPOINT_EVERY + 2
+    for v in range(1, head + 1):
+        commit = {"op": "stamp", "actions": []}
+        if v % 3 == 0:  # versions 3, 6, 9, 12 carry meta; the rest none
+            commit["meta"] = {"v": v}
+        assert txlog._try_commit(t, v, commit)
+
+    def meta_at(v):
+        return txlog.snapshot_state(t, v)["meta"]
+
+    assert meta_at(0) is None and meta_at(2) is None
+    assert [meta_at(v) for v in (3, 5, 6, 10, 11)] == [
+        {"v": 3}, {"v": 3}, {"v": 6}, {"v": 9}, {"v": 9}
+    ]
+    cp = txlog._newest_checkpoint_at_or_before(t, head)
+    assert cp == txlog.CHECKPOINT_EVERY
+    with open(txlog._checkpoint_path(t, cp)) as fh:
+        assert json.load(fh)["meta"] == {"v": 9}
+    for v in range(cp):
+        os.remove(os.path.join(t, txlog.LOG_DIR, f"{v:08d}.json"))
+    assert meta_at(cp + 1) == {"v": 9}
+    assert meta_at(head) == {"v": 12}
+    assert txlog.read(spark, t).count() == 1
+
+
 def test_partitioned_table_roundtrip_and_merge(spark, tmp_path):
     t = str(tmp_path / "t")
     df = spark.createDataFrame(

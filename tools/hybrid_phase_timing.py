@@ -1,5 +1,5 @@
 """Per-phase wall-clock fencing for the hybrid_rrf_retrieval contract
-slot (r13 measurement aid, mirrors tools/bm25_phase_timing.py): chunk
+slot (r13 measurement aid): chunk
 store write, dense index build, bm25 index build (the contract runs
 the two builds concurrently — both the concurrent wall and the solo
 costs are reported), probe+fuse, rerank. Usage:
