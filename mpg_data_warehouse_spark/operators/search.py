@@ -546,37 +546,68 @@ def bm25_search_many(
     The stats and the probed buckets' live files come from ONE pinned
     version of the index, so the returned frame answers from that
     version even if it is collected after a later append or
-    compaction. Scale: the scan touches only the query terms' bucket
-    files; ``df`` comes from the probed posting lists themselves
-    (count per term — no corpus pass); per-query top-k is a
-    WindowGroupLimit.
+    compaction.
+
+    Plan: one exchange. The query batch rides in the plan as a literal
+    map from term to its query ids, so no query frame is shipped or
+    joined; each probed posting row explodes into one row per query
+    that asked for its term, and the rows are hash-partitioned once by
+    ``query_id``. Within one query a term's rows are exactly its
+    posting list, so ``df`` is ``count(1) over (query_id, term)`` —
+    no corpus pass and no separate df aggregate. The ``(query_id,
+    doc)`` sum and the per-query top-k reuse that partitioning; the
+    top-k is a final-mode WindowGroupLimit (with no exchange after the
+    sum there is no map-side partial limit to add).
+
+    Scale: the scan touches only the query terms' bucket files. Each
+    query's probed postings are scored in one task, so parallelism
+    comes from the number of queries in the batch, not from within a
+    query. For very long posting lists the way back to intra-query
+    parallelism is a stored term-df dictionary or per-partition
+    pruning of the postings.
     """
     if not queries:
         raise ValueError("queries is empty")
-    qterms = [
-        (qi, t)
-        for qi, q in enumerate(queries)
-        for t in sorted({w for w in (q or "").strip().lower().split() if w})
-    ]
-    if not qterms:
+    qids_of: dict[str, list[int]] = {}
+    for qi, q in enumerate(queries):
+        for t in sorted({w for w in (q or "").strip().lower().split() if w}):
+            qids_of.setdefault(t, []).append(qi)
+    if not qids_of:
         raise ValueError("no non-empty query terms")
+    terms = sorted(qids_of)
     state = _snapshot(index_path)
     stats = state["meta"]
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
     n_buckets = _check_n_buckets(n_buckets, stats["n_buckets"], index_path)
 
-    qdf = spark.createDataFrame(qterms, "query_id long, term string")
     # bucket probe DRIVER-SIDE (r13): ``term_bucket_py`` replaces the
     # LocalTableScan-collect planning job entirely (parity pinned in
     # tests; a drifted bucket prunes wrong and fails the oracle)
-    buckets = sorted({term_bucket_py(t, n_buckets) for _, t in qterms})
+    buckets = sorted({term_bucket_py(t, n_buckets) for t in terms})
     postings = _read(spark, index_path, state, "bucket", buckets).filter(
-        F.col("term").isin(sorted({t for _, t in qterms}))
+        F.col("term").isin(terms)
     )
-    # df per term from the probed lists (posting rows are one per
-    # (term, doc)); tiny — at most |query terms| rows
-    dfreq = postings.groupBy("term").agg(
-        F.count(F.lit(1)).cast("double").alias("_df")
+    qids = F.create_map(
+        *(
+            c
+            for t in terms
+            for c in (
+                F.lit(t),
+                F.array(*(F.lit(qi) for qi in qids_of[t])).cast(
+                    "array<long>"
+                ),
+            )
+        )
+    )
+    probed = (
+        postings.withColumn("query_id", F.explode(qids[F.col("term")]))
+        .repartition("query_id")
+        .withColumn(
+            "_df",
+            F.count(F.lit(1))
+            .over(W.partitionBy("query_id", "term"))
+            .cast("double"),
+        )
     )
     idf = F.log(
         F.lit(1.0)
@@ -586,9 +617,7 @@ def bm25_search_many(
         1.0 - b + b * F.col("dl") / F.lit(float(avgdl))
     )
     scored = (
-        postings.join(F.broadcast(dfreq), "term")
-        .join(F.broadcast(qdf), "term")
-        .withColumn("_w", idf * F.col("tf") * (k1 + 1.0) / denom)
+        probed.withColumn("_w", idf * F.col("tf") * (k1 + 1.0) / denom)
         .groupBy("query_id", id_col)
         .agg(F.round(F.sum("_w"), 6).alias("score"))
     )

@@ -269,6 +269,25 @@ def _rowwise_query_embedding(
     return _unit_from_sparse_map(with_map, dim, out_col)
 
 
+def _literal_rows(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
+    """``rows`` (tuples in the column order of ``ddl``) as a frame
+    planned in the JVM: one literal array of structs, inlined over a
+    one-row range. A request's query batch is a few rows;
+    ``spark.createDataFrame`` would plan it as a Python RDD, and every
+    job that reads it would start a Python worker to unpickle them."""
+    arr = F.array(*(F.struct(*(F.lit(v) for v in row)) for row in rows))
+    return spark.range(1, numPartitions=1).select(
+        F.inline(arr.cast(f"array<struct<{ddl}>>"))
+    )
+
+
+def _query_text(query_texts: list[str]):
+    """``query_texts[query_id]`` as a literal array lookup: attaches
+    the query text to result rows with no join."""
+    texts = F.array(*(F.lit(t) for t in query_texts)).cast("array<string>")
+    return texts[F.col("query_id")].alias("query_text")
+
+
 def _write_chunk_store(
     docs: DataFrame,
     chunks_path: str,
@@ -375,22 +394,19 @@ def _probe_chunk_ranks(
         raise ValueError("query_texts is empty")
     dim, hash_fn = _resolve_encoder(index_path, dim, hash_fn)
     neg_ids = [(-(i + 1), t) for i, t in enumerate(query_texts)]
-    # r13 probe-latency rework (guide §2.1/§5): the query batch IS a
-    # bounded driver-side list, so everything up to the corpus-scale
-    # scoring join is driver-sized work that used to ride 5-6 tiny
-    # Spark jobs (multi-exchange query embedding executed twice — once
-    # for the index-dim guard's first(), once for the probe-cell
-    # materialization — plus the probe-cell distinct().collect()).
-    # Now: ONE narrow job embeds the batch (shuffle-free row-wise
-    # twin, values identical — see _rowwise_query_embedding), the
-    # centroid table is collected once (bounded: |cells| × dim), and
-    # nprobe-cell selection replays _probe_cells' exact arithmetic in
-    # Python — the same sequential-fold dot product, sqrt norms and
-    # (cosine DESC, cell ASC) ordering, so the chosen cells are
-    # bit-identical (parity pinned by
-    # test_driver_side_probe_cells_match_probe_cells). The scoring
-    # join + top-k stays distributed and partition-pruned
-    # (_score_probes over the nprobe cell directories only).
+    # The query batch is a bounded driver-side list, so everything up
+    # to the corpus-scale scoring join is driver-sized work. ONE narrow
+    # job embeds the batch (shuffle-free row-wise twin, values
+    # identical — see _rowwise_query_embedding), the centroid table is
+    # collected once (bounded: |cells| × dim), and nprobe-cell
+    # selection replays _probe_cells' exact arithmetic in Python — the
+    # same sequential-fold dot product, sqrt norms and (cosine DESC,
+    # cell ASC) ordering, so the chosen cells are bit-identical (parity
+    # pinned by test_driver_side_probe_cells_match_probe_cells). The
+    # query texts and the probe rows enter their plans as JVM literals
+    # (_literal_rows), never as Python RDDs. The scoring join + top-k
+    # stays distributed and partition-pruned (_score_probes over the
+    # nprobe cell directories only).
     import math
 
     from mpg_data_warehouse_spark.operators.similarity import (
@@ -399,7 +415,7 @@ def _probe_chunk_ranks(
     )
 
     queries = _rowwise_query_embedding(
-        spark.createDataFrame(neg_ids, "chunk_key long, q_text string"),
+        _literal_rows(spark, neg_ids, "chunk_key bigint, q_text string"),
         "q_text",
         dim,
         hash_fn=hash_fn,
@@ -435,9 +451,10 @@ def _probe_chunk_ranks(
         for _, cell in ranked[:nprobe]:
             probe_rows.append((qid, vec, qn, cell))
     cell_type = dict(centroids.dtypes)["cent_id"]
-    probes = spark.createDataFrame(
+    probes = _literal_rows(
+        spark,
         probe_rows,
-        f"query_id long, q_vec array<double>, q_norm double, "
+        f"query_id bigint, q_vec array<double>, q_norm double, "
         f"cell {cell_type}",
     )
     probe_cells = sorted({cell for *_rest, cell in probe_rows})
@@ -480,15 +497,9 @@ def retrieve(
     chunks = spark.read.parquet(chunks_path)
     return (
         hits.join(chunks, "chunk_key")
-        .join(
-            spark.createDataFrame(
-                list(enumerate(query_texts)), "query_id long, query_text string"
-            ),
-            "query_id",
-        )
         .select(
             "query_id",
-            "query_text",
+            _query_text(query_texts),
             "chunk_key",
             "doc_id",
             "chunk_id",
@@ -576,13 +587,14 @@ def hybrid_retrieve(
     from mpg_data_warehouse_spark.concurrency import await_all
     from mpg_data_warehouse_spark.operators.search import bm25_search_many
 
-    # Each retriever's PREP runs one driver-side planning job (the IVF
-    # probe collects its cell set, the BM25 probe its term buckets) —
-    # independent work against disjoint indexes, so the two legs are
-    # constructed from separate driver threads (the build-side pattern
-    # of build_hybrid_index, applied to the probe side): the slot pays
-    # max(prep_d, prep_l), not their sum. Both frames are fully
-    # constructed before fusion; exceptions propagate.
+    # The dense leg's PREP runs Spark jobs on the driver (embed the
+    # query batch, collect the centroids); the lexical leg's reads the
+    # index's pinned txlog state. They are independent work against
+    # disjoint indexes, so the two legs are constructed from separate
+    # driver threads (the build-side pattern of build_hybrid_index,
+    # applied to the probe side): the slot pays max(prep_d, prep_l),
+    # not their sum. Both frames are fully constructed before fusion;
+    # exceptions propagate.
     def _dense_leg() -> DataFrame:
         # dense ranks come UNHYDRATED from the shared probe core — the
         # chunk store is scanned once, for the fused winners only
@@ -603,8 +615,8 @@ def hybrid_retrieve(
             ).select(
                 "query_id", "chunk_key", F.col("rank").alias("_rank_l")
             )
-        return spark.createDataFrame(
-            [], "query_id long, chunk_key long, _rank_l long"
+        return _literal_rows(
+            spark, [], "query_id bigint, chunk_key bigint, _rank_l bigint"
         )
 
     dense, lex = await_all(_dense_leg, _lex_leg)
@@ -633,16 +645,9 @@ def hybrid_retrieve(
     chunks = spark.read.parquet(chunks_path)
     return (
         top.join(chunks, "chunk_key")
-        .join(
-            spark.createDataFrame(
-                list(enumerate(query_texts)),
-                "query_id long, query_text string",
-            ),
-            "query_id",
-        )
         .select(
             "query_id",
-            "query_text",
+            _query_text(query_texts),
             "chunk_key",
             "doc_id",
             "chunk_id",

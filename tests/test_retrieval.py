@@ -428,3 +428,58 @@ def test_driver_side_probe_cells_match_probe_cells(spark, tmp_path):
             for _, cell in ranked[:nprobe]:
                 py_sel.add((r.vec_id, cell))
         assert py_sel == spark_sel, nprobe
+
+
+def test_query_paths_plan_literals_and_bm25_probe_runs_two_jobs(
+    spark, tmp_path
+):
+    """Per-request query data enters the plans as JVM literals: no
+    executed query-path plan scans a Python RDD (``ExistingRDD``), and
+    a warm single-query BM25 probe costs at most two Spark jobs (one
+    shuffle map stage, one result stage)."""
+    from mpg_data_warehouse_spark.operators.search import bm25_search_many
+    from mpg_data_warehouse_spark.plans.retrieval import (
+        build_hybrid_index,
+        hybrid_retrieve,
+    )
+
+    idx = str(tmp_path / "idx")
+    chunks = str(tmp_path / "chunks")
+    bm25 = str(tmp_path / "bm25")
+    build_hybrid_index(
+        _corpus(spark), idx, chunks, bm25,
+        dim=32, max_tokens=16, overlap=4, n_centroids=3,
+    )
+    qs = ["solar panels", "bread flour", ""]
+    frames = {
+        "bm25_search_many": bm25_search_many(
+            spark, bm25, qs, k=3, id_col="chunk_key"
+        ),
+        "retrieve": retrieve(spark, idx, chunks, qs, k=3, dim=32, nprobe=2),
+        "hybrid_retrieve": hybrid_retrieve(
+            spark, idx, chunks, bm25, qs, k=3, dim=32, nprobe=2
+        ),
+    }
+    for name, frame in frames.items():
+        assert frame.collect(), name
+        plan = frame._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, (name, plan)
+
+    sc = spark.sparkContext
+    group = "bm25-probe-job-count"
+
+    def probe_jobs() -> int:
+        sc.setJobGroup(group, "single-query BM25 probe")
+        try:
+            bm25_search_many(
+                spark, bm25, ["telescope"], k=3, id_col="chunk_key"
+            ).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the status store is fed by the asynchronous listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    warm = probe_jobs()
+    assert probe_jobs() - warm <= 2

@@ -119,6 +119,7 @@ def _bm25_ref(corpus, query_terms, k1=1.2, b=0.75):
 def test_bm25_matches_reference_formula(spark, tmp_path):
     from mpg_data_warehouse_spark.operators.search import (
         bm25_search,
+        bm25_search_many,
         build_ranked_index,
     )
 
@@ -141,6 +142,19 @@ def test_bm25_matches_reference_formula(spark, tmp_path):
     assert set(got) == set(ref)
     for d in ref:
         assert abs(got[d] - ref[d]) < 1e-5, (d, got[d], ref[d])
+    # one batch: two queries sharing a term, a repeated query, an empty
+    # query and a term absent from the index. A shared term's df must
+    # be its posting-list length, not that times the queries asking.
+    batch = ["alpha charlie", "charlie delta", "alpha charlie", "", "zulu alpha"]
+    got_many = {}
+    for r in bm25_search_many(spark, idx, batch, k=10).collect():
+        got_many.setdefault(r.query_id, {})[r.doc_id] = r.score
+    for qi, q in enumerate(batch):
+        ref = _bm25_ref(corpus, q.split())
+        got = got_many.get(qi, {})
+        assert set(got) == set(ref), (q, got, ref)
+        for d in ref:
+            assert abs(got[d] - ref[d]) < 1e-5, (q, d, got[d], ref[d])
 
 
 def test_await_all_settles_every_leg_before_raising():
