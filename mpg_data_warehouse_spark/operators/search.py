@@ -464,7 +464,8 @@ def build_ranked_index(
         ).persist()
         try:
             man = _manifest_rows(
-                postings, dl, id_col, capped=max_df is not None, n_idb=n_idb
+                postings, id_col, n_idb,
+                capped_dl=dl if max_df is not None else None,
             )
             # both sets are independent consumers of the persisted
             # postings: write them concurrently (wall = max, not sum)
@@ -496,24 +497,24 @@ def build_ranked_index(
 
 def _manifest_rows(
     postings: DataFrame,
-    dl: DataFrame,
     id_col: str,
-    capped: bool = False,
-    n_idb: int = N_IDB,
+    n_idb: int,
+    capped_dl: DataFrame | None = None,
 ) -> DataFrame:
     """(id, dl, buckets, idb) manifest rows — one agg over the
     already-persisted postings (which carry ``dl`` denormalized).
     Only a build with ``max_df`` capping can produce a doc whose
     EVERY term was capped away — still counted in the corpus stats
-    but owning no posting rows — so only then does the dl-side
-    anti-join pick up those empty-bucket rows (``capped=True``); the
-    common path is one |docs|-grain agg and nothing else."""
+    but owning no posting rows — so only that build passes its
+    per-doc ``(id, dl)`` frame as ``capped_dl``, and only then does an
+    anti-join pick up those empty-bucket rows; every other path is
+    one |docs|-grain agg and nothing else."""
     bsets = postings.groupBy(id_col).agg(
         F.first("dl").alias("dl"),
         F.collect_set("bucket").alias("buckets"),
     )
-    if capped:
-        orphans = dl.join(bsets.select(id_col), id_col, "left_anti")
+    if capped_dl is not None:
+        orphans = capped_dl.join(bsets.select(id_col), id_col, "left_anti")
         bsets = bsets.unionByName(
             orphans.withColumn(
                 "buckets", F.array().cast("array<bigint>")
@@ -671,8 +672,16 @@ def bm25_append_index(
     batch's ids hash to, and holds even if the redelivered batch
     carries MUTATED text. ``max_df`` capping is a BUILD-time decision
     and is not re-applied here — recap on the periodic rebuild
-    cadence, like IVF centroid refresh. Returns the number of
-    documents appended."""
+    cadence, like IVF centroid refresh.
+
+    Plan: the batch is read once (persisted). The surviving tokens are
+    hash-partitioned once by id; the ``(id, term)`` tf aggregate and
+    ``dl = sum(tf) over (partition by id)`` both reuse that
+    partitioning and land in ONE persisted postings frame, which feeds
+    the stats aggregate (``count_distinct(id)``, ``sum(tf)``), the
+    manifest agg and the postings write. A doc with no surviving
+    token has no postings and is not counted, exactly as in a build.
+    Returns the number of documents appended."""
     spark = docs.sparkSession
     state = _snapshot(path)
     stats = state["meta"]
@@ -695,37 +704,33 @@ def bm25_append_index(
         existing = _read(spark, path, state, "idb", idbs).select(id_col)
         fresh = batch.join(existing, id_col, "left_anti")
 
-        toks = fresh.select(
-            F.col(id_col), F.explode(norm_tokens(text_col)).alias("term")
-        ).filter(F.length("term") >= min_term_len)
-        tf = (
-            toks.groupBy(id_col, "term")
-            .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-            .persist()
-        )
-        pinned.append(tf)
-        dl = (
-            tf.groupBy(id_col)
-            .agg(F.sum("tf").cast("long").alias("dl"))
-            .persist()
-        )
-        pinned.append(dl)
-        batch_row = dl.agg(
-            F.count(F.lit(1)).alias("n"), F.sum("dl").alias("s")
-        ).first()
-        n_new = int(batch_row["n"] or 0)
-        if n_new == 0:
-            return 0
+        # ONE persisted postings frame, one exchange: tokens clustered by
+        # id serve the (id, term) tf agg AND the per-doc dl window, so
+        # no separate dl frame is built or joined back
         postings = (
-            tf.join(dl, id_col)
+            fresh.select(
+                F.col(id_col), F.explode(norm_tokens(text_col)).alias("term")
+            )
+            .filter(F.length("term") >= min_term_len)
+            .repartition(id_col)
+            .groupBy(id_col, "term")
+            .agg(F.count(F.lit(1)).cast("long").alias("tf"))
             .select(
-                "term", id_col, "tf", "dl",
+                "term", id_col, "tf",
+                F.sum("tf").over(W.partitionBy(id_col)).cast("long")
+                .alias("dl"),
                 term_bucket(F.col("term"), n_buckets).alias("bucket"),
             )
             .persist()
         )
         pinned.append(postings)
-        man = _manifest_rows(postings, dl, id_col, n_idb=n_idb)
+        batch_row = postings.agg(
+            F.count_distinct(id_col).alias("n"), F.sum("tf").alias("s")
+        ).first()
+        n_new = int(batch_row["n"])
+        if n_new == 0:
+            return 0
+        man = _manifest_rows(postings, id_col, n_idb)
         adds_p, adds_m = await_all(
             lambda: _write(postings, path, "bucket"),
             lambda: _write(man, path, "idb"),
@@ -760,52 +765,60 @@ def bm25_delete_index(
     are rewritten without the deleted ids, and the corpus stats retreat
     arithmetically from the manifest's per-doc ``dl`` — all in one
     commit. df self-corrects at query time (derived from the probed
-    lists). Returns documents removed. Extra columns on ``ids`` (e.g.
-    the old text payload) are ignored."""
+    lists). ``ids`` is read once: its distinct ids are persisted for
+    the call. Returns documents removed. Extra columns on ``ids``
+    (e.g. the old text payload) are ignored."""
     spark = ids.sparkSession
     state = _snapshot(path)
     stats = state["meta"]
 
-    del_ids = F.broadcast(ids.select(id_col).distinct())
-    idbs = [
-        r["i"]
-        for r in del_ids.select(_idb(id_col, stats["n_idb"]).alias("i"))
-        .distinct()
-        .collect()
-    ]
-    man_scoped = _read(spark, path, state, "idb", idbs)
-    # ONE job answers all three driver-side questions (victim count,
-    # dl retreat, union of hit posting buckets) — collect_list of the
-    # victims' bucket arrays, flattened and deduped as an expression
-    gone_row = (
-        man_scoped.join(del_ids, id_col, "left_semi")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("dl").alias("s"),
-            F.array_distinct(F.flatten(F.collect_list("buckets"))).alias(
-                "bs"
+    # The distinct ids are PERSISTED and every step reads them: the
+    # victim count, the dl retreat and both rewrites agree even when
+    # ``ids`` is nondeterministic
+    id_set = ids.select(id_col).distinct().persist()
+    try:
+        del_ids = F.broadcast(id_set)
+        idbs = [
+            r["i"]
+            for r in del_ids.select(_idb(id_col, stats["n_idb"]).alias("i"))
+            .distinct()
+            .collect()
+        ]
+        man_scoped = _read(spark, path, state, "idb", idbs)
+        # ONE job answers all three driver-side questions (victim count,
+        # dl retreat, union of hit posting buckets) — collect_list of the
+        # victims' bucket arrays, flattened and deduped as an expression
+        gone_row = (
+            man_scoped.join(del_ids, id_col, "left_semi")
+            .agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum("dl").alias("s"),
+                F.array_distinct(F.flatten(F.collect_list("buckets"))).alias(
+                    "bs"
+                ),
+            )
+            .first()
+        )
+        n_gone = int(gone_row["n"] or 0)
+        if n_gone == 0:
+            return 0
+        buckets = gone_row["bs"] or []
+        # survivors read the files this commit removes; those stay on
+        # disk (only unreferenced), so the lineage needs no checkpoint
+        adds_p, adds_m = await_all(
+            lambda: _write(
+                _read(spark, path, state, "bucket", buckets).join(
+                    del_ids, id_col, "left_anti"
+                ),
+                path,
+                "bucket",
+            ),
+            lambda: _write(
+                man_scoped.join(del_ids, id_col, "left_anti"), path, "idb"
             ),
         )
-        .first()
-    )
-    n_gone = int(gone_row["n"] or 0)
-    if n_gone == 0:
-        return 0
-    buckets = gone_row["bs"] or []
-    # survivors read the files this commit removes; those stay on disk
-    # (only unreferenced), so the lineage needs no checkpoint
-    adds_p, adds_m = await_all(
-        lambda: _write(
-            _read(spark, path, state, "bucket", buckets).join(
-                del_ids, id_col, "left_anti"
-            ),
-            path,
-            "bucket",
-        ),
-        lambda: _write(
-            man_scoped.join(del_ids, id_col, "left_anti"), path, "idb"
-        ),
-    )
+    finally:
+        id_set.unpersist()
     n_docs = stats["n_docs"] - n_gone
     dl_sum = stats["dl_sum"] - int(gone_row["s"] or 0)
     _commit(

@@ -710,73 +710,89 @@ def _plan_merge(
     detected in ONE aggregate over the (already key-grouped) batch
     and raised loudly; callers with duplicate sources dedupe with an
     explicit, deterministic rule first (e.g. max_by on an event
-    timestamp)."""
+    timestamp).
+
+    The batch is evaluated ONCE: it is persisted after the schema
+    check, and the guard/bounds aggregate, the touched-file probe, the
+    left-anti probe and the write all read that one materialization,
+    released once the data files are written. So the footer-pruning
+    bounds, the probed keys and the written rows are the same rows
+    even when ``updates`` is nondeterministic (sample, limit, rand) —
+    re-evaluated per use, it could write a key the probe never saw and
+    leave a duplicate. The price: a batch larger than executor memory
+    spills to local disk instead of being recomputed per use."""
     _check_schema(state, updates)
-    # ONE aggregate job yields the dup/null-key guards AND the footer-
-    # pruning key bounds (min/max over the grouped keys == min/max
-    # over the batch): the guard must not add a full extra pass over a
-    # possibly-expensive derived updates plan.
-    chk = (
-        updates.groupBy(*keys)
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .agg(
-            F.max("_c").alias("_max_per_key"),
-            F.max(
-                (
-                    F.greatest(*[F.col(k).isNull() for k in keys])
-                    if len(keys) > 1
-                    else F.col(keys[0]).isNull()
-                ).cast("int")
-            ).alias("_has_null_key"),
-            *[F.min(k).alias(f"lo_{k}") for k in keys],
-            *[F.max(k).alias(f"hi_{k}") for k in keys],
-        )
-        .first()
-    )
-    if chk is not None and chk["_max_per_key"] is not None:
-        if chk["_max_per_key"] > 1:
-            raise ValueError(
-                f"merge batch has up to {chk['_max_per_key']} rows per "
-                f"key {keys} — upsert result would be nondeterministic; "
-                "dedupe the batch with an explicit rule first"
+    # a projection, so the release below never drops a cache the
+    # caller holds on ``updates`` itself
+    updates = updates.select(*updates.columns).persist()
+    try:
+        # ONE aggregate job yields the dup/null-key guards AND the
+        # footer-pruning key bounds (min/max over the grouped keys ==
+        # min/max over the batch), and materializes the batch for every
+        # later use.
+        chk = (
+            updates.groupBy(*keys)
+            .agg(F.count(F.lit(1)).alias("_c"))
+            .agg(
+                F.max("_c").alias("_max_per_key"),
+                F.max(
+                    (
+                        F.greatest(*[F.col(k).isNull() for k in keys])
+                        if len(keys) > 1
+                        else F.col(keys[0]).isNull()
+                    ).cast("int")
+                ).alias("_has_null_key"),
+                *[F.min(k).alias(f"lo_{k}") for k in keys],
+                *[F.max(k).alias(f"hi_{k}") for k in keys],
             )
-        if chk["_has_null_key"]:
-            raise ValueError(
-                f"merge batch contains NULL values in key columns "
-                f"{keys} — null keys never match and would duplicate "
-                "on every merge"
+            .first()
+        )
+        if chk is not None and chk["_max_per_key"] is not None:
+            if chk["_max_per_key"] > 1:
+                raise ValueError(
+                    f"merge batch has up to {chk['_max_per_key']} rows per "
+                    f"key {keys} — upsert result would be nondeterministic; "
+                    "dedupe the batch with an explicit rule first"
+                )
+            if chk["_has_null_key"]:
+                raise ValueError(
+                    f"merge batch contains NULL values in key columns "
+                    f"{keys} — null keys never match and would duplicate "
+                    "on every merge"
+                )
+        bounds = {
+            k: (_jsonable(chk[f"lo_{k}"]), _jsonable(chk[f"hi_{k}"]))
+            for k in keys
+        }
+        if chk is None or chk["_max_per_key"] is None:
+            # EMPTY batch (an idle CDC cycle / empty streaming
+            # micro-batch): nothing to touch, nothing to write. Without
+            # this early exit the all-None bounds keep every live file
+            # as a candidate and the level-2 probe key-scans the ENTIRE
+            # table against an empty frame — a full-table read per idle
+            # cycle at 10^5-file scale. Callers still commit (the
+            # streaming sink's epoch stamp must land for exactly-once
+            # bookkeeping); the commit just carries no actions.
+            return [], set(), bounds
+        touched = _touched_files(
+            spark, table, state, updates, keys, bounds, broadcast_updates
+        )
+        if touched:
+            current = _read_files(spark, table, state, touched).select(
+                *[F.col(f.name) for f in updates.schema.fields]
             )
-    bounds = {
-        k: (_jsonable(chk[f"lo_{k}"]), _jsonable(chk[f"hi_{k}"]))
-        for k in keys
-    }
-    if chk is None or chk["_max_per_key"] is None:
-        # EMPTY batch (an idle CDC cycle / empty streaming micro-batch):
-        # nothing to touch, nothing to write. Without this early exit
-        # the all-None bounds keep every live file as a candidate and
-        # the level-2 probe key-scans the ENTIRE table against an
-        # empty frame — a full-table read per idle cycle at 10^5-file
-        # scale. Callers still commit (the streaming sink's epoch
-        # stamp must land for exactly-once bookkeeping); the commit
-        # just carries no actions.
-        return [], set(), bounds
-    touched = _touched_files(
-        spark, table, state, updates, keys, bounds, broadcast_updates
-    )
-    if touched:
-        current = _read_files(spark, table, state, touched).select(
-            *[F.col(f.name) for f in updates.schema.fields]
-        )
-        probe = updates.select(*keys)
-        if broadcast_updates:
-            probe = F.broadcast(probe)
-        merged = current.join(probe, on=keys, how="left_anti").unionByName(
-            updates
-        )
-    else:
-        merged = updates
-    adds = _write_data_files(merged, table, state["partition_by"])
-    return adds, set(touched), bounds
+            probe = updates.select(*keys)
+            if broadcast_updates:
+                probe = F.broadcast(probe)
+            merged = current.join(
+                probe, on=keys, how="left_anti"
+            ).unionByName(updates)
+        else:
+            merged = updates
+        adds = _write_data_files(merged, table, state["partition_by"])
+        return adds, set(touched), bounds
+    finally:
+        updates.unpersist()
 
 
 def _merge_conflict_check(
@@ -820,6 +836,11 @@ def merge(
     O(table). A concurrent commit that removed a touched file OR
     appended files whose key range overlaps this batch raises
     ``TxConflict`` instead of committing duplicate keys.
+
+    ``updates`` is evaluated once per call (persisted, then released
+    after the write), so a nondeterministic upstream cannot write rows
+    the key probes never saw; a batch that does not fit in memory
+    spills to local disk rather than being recomputed.
 
     ``broadcast_updates=False`` switches the key probes to shuffle
     joins for CDC-backfill-sized batches that would blow the

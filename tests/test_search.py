@@ -297,6 +297,7 @@ def test_bm25_append_matches_full_rebuild(spark, tmp_path):
         [
             Row(doc_id=3, text="charlie delta foxtrot"),
             Row(doc_id=4, text="alpha alpha golf"),
+            Row(doc_id=5, text=""),  # no token: no postings, not counted
         ]
     )
     inc = str(tmp_path / "inc")
@@ -331,6 +332,107 @@ def test_bm25_append_replay_is_idempotent(spark, tmp_path):
     rows = bm25_search(spark, idx, "alpha").collect()
     assert {r.doc_id for r in rows} == {1, 2}
     assert len(rows) == 2
+
+
+def test_ingest_calls_evaluate_their_batch_once(spark, tmp_path):
+    """``txlog.merge``, ``bm25_append_index`` and ``bm25_delete_index``
+    each read their caller's batch exactly once: a Python UDF on the
+    key column ticks an accumulator once per evaluated row, so every
+    re-evaluation of the batch would show as extra ticks."""
+    from mpg_data_warehouse_spark.operators.search import (
+        bm25_append_index,
+        bm25_delete_index,
+        build_ranked_index,
+    )
+    from mpg_data_warehouse_spark.sources import txlog
+
+    ticks = spark.sparkContext.accumulator(0)
+
+    def tick(v):
+        ticks.add(1)
+        return v
+
+    tick_udf = F.udf(tick, "bigint").asNondeterministic()
+
+    def counted(rows):
+        return spark.createDataFrame(rows).withColumn(
+            "doc_id", tick_udf("doc_id")
+        )
+
+    def rows_read(call, rows) -> int:
+        ticks.value = 0
+        call(counted(rows))
+        return ticks.value
+
+    tx = str(tmp_path / "tx")
+    txlog.create(
+        spark,
+        tx,
+        spark.createDataFrame(
+            [Row(doc_id=1, text="alpha"), Row(doc_id=2, text="bravo")]
+        ),
+    )
+    upsert = [Row(doc_id=2, text="bravo two"), Row(doc_id=3, text="charlie")]
+    assert rows_read(
+        lambda b: txlog.merge(spark, tx, b, keys=["doc_id"]), upsert
+    ) == len(upsert)
+    assert {(r.doc_id, r.text) for r in txlog.read(spark, tx).collect()} == {
+        (1, "alpha"), (2, "bravo two"), (3, "charlie")
+    }
+
+    idx = str(tmp_path / "idx")
+    build_ranked_index(
+        spark.createDataFrame([Row(doc_id=1, text="alpha bravo")]), idx
+    )
+    fresh = [Row(doc_id=2, text="alpha charlie"), Row(doc_id=3, text="delta")]
+    assert rows_read(lambda b: bm25_append_index(b, idx), fresh) == len(fresh)
+    assert rows_read(lambda b: bm25_delete_index(b, idx), fresh) == len(fresh)
+
+
+def _jobs_run_by(spark, call) -> int:
+    """Spark jobs ``call`` runs on any driver thread (the index writes
+    run on ``await_all`` threads, outside the caller's job group):
+    the job ids the status store gained, read once the asynchronous
+    listener bus has fed it."""
+    ssc = spark.sparkContext._jsc.sc()
+    statuses = spark.sparkContext._gateway.jvm.java.util.ArrayList()
+
+    def next_job_id() -> int:
+        ssc.listenerBus().waitUntilEmpty()
+        jobs = ssc.statusStore().jobsList(statuses)  # newest first
+        return jobs.apply(0).jobId() + 1 if jobs.size() else 0
+
+    before = next_job_id()
+    call()
+    return next_job_id() - before
+
+
+def test_bm25_append_job_count(spark, tmp_path):
+    """A warm append of a small batch runs at most 12 Spark jobs: the
+    batch is read once and tf, dl and the stats come from one persisted
+    postings frame (18 jobs with separate tf/dl frames and a join)."""
+    from mpg_data_warehouse_spark.operators.search import (
+        bm25_append_index,
+        build_ranked_index,
+    )
+
+    idx = str(tmp_path / "idx")
+    build_ranked_index(
+        spark.createDataFrame(
+            [Row(doc_id=i, text=f"alpha bravo t{i}") for i in range(8)]
+        ),
+        idx,
+    )
+
+    def append(lo: int) -> int:
+        batch = spark.createDataFrame(
+            [Row(doc_id=i, text=f"charlie t{i} t{i}")
+             for i in range(lo, lo + 4)]
+        )
+        return _jobs_run_by(spark, lambda: bm25_append_index(batch, idx))
+
+    append(100)  # warm
+    assert append(200) <= 12
 
 
 def test_bm25_delete_matches_rebuild_without_docs(spark, tmp_path):
