@@ -25,7 +25,7 @@ out to be the better shape anyway:
 - At rest it is plain parquet + a JSON sidecar carrying (n_bits, k,
   seed), so the filter is self-describing (a probe against mismatched
   parameters would silently hash to wrong positions — the sidecar
-  makes that impossible, same policy as ``search._index_meta``).
+  makes that impossible, the policy every persisted index follows).
 - Sizing: FPR ≈ (1 − e^(−k·n/m))^k. The default m = 2²⁶ bits (8 MB
   as 2²⁰ block rows) holds ~4.7 M keys at 1% FPR with k = 7;
   at 100 TB scale pick m ≈ 10 bits/key — a 10 B-key corpus is a

@@ -2,29 +2,28 @@
 the corpus.
 
 The retrieval complement to the dedup family's transient inverted
-indexes (``dedup.exploded_shingles``): a (term → doc ids) posting
-table laid out on disk partitioned by a hash bucket of the term, so a
-keyword query reads ONLY its terms' buckets (partition-filter
-pushdown) and then exact-matches inside them — a point lookup over
-plain parquet, same layout trick as ``append.write_keybucket_table``.
+indexes (``dedup.exploded_shingles``): one ranked index
+(``build_ranked_index``) holds (term → doc ids) postings with term
+frequencies, partitioned by a hash bucket of the term, so a keyword
+query reads ONLY its terms' buckets and then exact-matches inside
+them. Boolean search (``search_terms``) and BM25 search
+(``bm25_search_many``) both read it.
 
-Scale shape (100 TB corpus): the index build is one explode +
-distinct (the only corpus-sized shuffle, keyed by (term, doc));
-postings are ~16 B/row. Queries touch |terms| buckets of
-|postings|/n_buckets each — independent of corpus text size. Hot
-terms ("the") make hot postings lists; index AFTER stopword-ish
-filtering (``min_term_len``/``max_df``) like every real search
-engine, or the posting list for a stopword IS the corpus.
+Scale shape (100 TB corpus): the index build is one explode + (doc,
+term) aggregate (the only corpus-sized shuffle); postings are
+~24 B/row. Queries touch |terms| buckets of |postings|/n_buckets each
+— independent of corpus text size. Hot terms ("the") make hot
+postings lists; index AFTER stopword-ish filtering
+(``min_term_len``/``max_df``) like every real search engine, or the
+posting list for a stopword IS the corpus.
 
-The ranked (BM25) index adds term frequencies, a ``_docs`` manifest
-and corpus stats, and lives in one ``sources/txlog`` table: every
-change is one atomic commit, and every query reads one pinned version
-(see the block comment above ``build_ranked_index``).
+The index adds a ``_docs`` manifest and corpus stats, and lives in
+one ``sources/txlog`` table: every change is one atomic commit, and
+every query reads one pinned version (see the block comment above
+``build_ranked_index``).
 """
 
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -33,11 +32,6 @@ from pyspark.sql import functions as F
 from mpg_data_warehouse_spark.concurrency import await_all
 from mpg_data_warehouse_spark.operators.text import norm_tokens
 from mpg_data_warehouse_spark.sources import txlog
-from mpg_data_warehouse_spark.sources.storage import (
-    get_storage_backend,
-    read_json,
-    write_json_atomic,
-)
 
 N_BUCKETS = 64
 
@@ -137,8 +131,6 @@ def term_bucket_py(term: str, n_buckets: int = N_BUCKETS) -> int:
     return xxhash64_py(term.encode("utf-8")) % n_buckets
 
 
-META_FILE = "_index_meta.json"
-
 # the ranked index's doc-id-keyed manifest (id → dl + posting buckets),
 # partitioned by an id-hash bucket so replay/delete guards read
 # |batch| partitions and never depend on the batch text matching the
@@ -166,20 +158,12 @@ def _adaptive_buckets(n_docs: int, cap: int = N_BUCKETS) -> int:
     return max(4, min(cap, n_docs // _DOCS_PER_BUCKET))
 
 
-def _write_meta(path: str, meta: dict) -> None:
-    write_json_atomic(os.path.join(path, META_FILE), meta)
-
-
-def _check_n_buckets(
-    requested: int | None, stored, index_path: str
-) -> int:
+def _check_n_buckets(requested: int | None, stored: int, index_path: str) -> int:
     """The index layout is self-describing: probes take the bucket
     count FROM the index, because a silent mismatch recomputes bucket
     ids against the wrong modulus and filters matching postings out —
     wrong/empty results with no error. An explicit caller value is
     validated, never trusted."""
-    if stored is None:
-        return requested if requested is not None else N_BUCKETS
     if requested is not None and requested != stored:
         raise ValueError(
             f"index at {index_path} was built with n_buckets={stored}, "
@@ -187,61 +171,6 @@ def _check_n_buckets(
             "would be silently filtered out"
         )
     return int(stored)
-
-
-def _resolve_n_buckets(index_path: str, requested: int | None) -> int:
-    meta_path = os.path.join(index_path, META_FILE)
-    stored = None
-    if get_storage_backend().exists(meta_path):
-        stored = read_json(meta_path).get("n_buckets")
-    return _check_n_buckets(requested, stored, index_path)
-
-
-def build_inverted_index(
-    docs: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n_buckets: int = N_BUCKETS,
-    min_term_len: int = 1,
-    max_df: int | None = None,
-) -> None:
-    """Write the posting table partitioned by term-hash bucket.
-
-    ``min_term_len`` drops short tokens; ``max_df`` drops terms whose
-    document frequency exceeds the cap (the stopword guard — at corpus
-    scale a capped term's posting list is useless for retrieval and
-    dominates index size). Distinct (term, doc) postings: one shuffle.
-    """
-    from mpg_data_warehouse_spark.sources.writers import (
-        ensure_readable_partition_layout,
-    )
-
-    toks = docs.select(
-        F.col(id_col), F.explode(norm_tokens(text_col)).alias("term")
-    ).filter(F.length("term") >= min_term_len)
-    postings = toks.distinct()
-    cached = None
-    if max_df is not None:
-        # persist the distinct postings: they feed both the df-count
-        # aggregate and the join — without it the corpus-sized
-        # explode+distinct shuffle would execute twice
-        cached = postings.persist()
-        dfreq = cached.groupBy("term").agg(F.count(F.lit(1)).alias("_df"))
-        postings = cached.join(
-            dfreq.filter(F.col("_df") <= max_df).select("term"), "term"
-        )
-    (
-        postings.withColumn("bucket", term_bucket(F.col("term"), n_buckets))
-        .repartition("bucket")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
-    if cached is not None:
-        cached.unpersist()
-    ensure_readable_partition_layout(path, postings, "bucket=0")
-    _write_meta(path, {"n_buckets": n_buckets})
 
 
 def search_terms(
@@ -252,34 +181,33 @@ def search_terms(
     n_buckets: int | None = None,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Doc ids matching the query terms — ``mode='any'`` (OR) or
-    ``'all'`` (AND, via a per-doc distinct-term count equal to the
-    query's). Query strings are run through the INDEX's tokenization
-    (lowercase + whitespace split), so a phrase like "machine
-    learning" becomes the two terms it was indexed as — a raw
-    whitespace-containing term could never match any posting, and in
-    'all' mode would poison the whole query empty.
+    """Doc ids matching the query terms in a ``build_ranked_index``
+    table — ``mode='any'`` (OR) or ``'all'`` (AND, via a per-doc
+    distinct-term count equal to the query's). Query strings are run
+    through the INDEX's tokenization (lowercase + whitespace split), so
+    a phrase like "machine learning" becomes the two terms it was
+    indexed as — a raw whitespace-containing term could never match
+    any posting, and in 'all' mode would poison the whole query empty.
 
-    The bucket predicate is a literal IN-list over the partition
-    column: the scan plans with PartitionFilters and never opens
-    non-matching buckets (pinned by test). Scale: |terms| bucket
-    scans + one small aggregate; the corpus is untouched.
+    The bucket count and the probed buckets' live files come from one
+    pinned version of the index, so the scan opens only those files
+    (pinned by test). Scale: |terms| bucket scans + one small
+    aggregate; the corpus is untouched.
     """
     if mode not in ("any", "all"):
         raise ValueError(f"mode must be 'any' or 'all', got {mode!r}")
-    n_buckets = _resolve_n_buckets(index_path, n_buckets)
     norm = sorted(
         {w for t in terms if t for w in t.strip().lower().split()}
     )
     if not norm:
         raise ValueError("no non-empty query terms")
-    postings = spark.read.parquet(index_path)
-    # bucket values computed DRIVER-SIDE (r13): ``term_bucket_py`` is
-    # the parity-pinned XXH64 twin, replacing a whole scheduled
-    # LocalTableScan-collect job per search call
+    state = txlog._index_state(index_path, "build_ranked_index")
+    n_buckets = _check_n_buckets(
+        n_buckets, state["meta"]["n_buckets"], index_path
+    )
     buckets = sorted({term_bucket_py(t, n_buckets) for t in norm})
-    hits = postings.filter(
-        F.col("bucket").isin(buckets) & F.col("term").isin(norm)
+    hits = _read(spark, index_path, state, "bucket", buckets).filter(
+        F.col("term").isin(norm)
     )
     if mode == "any":
         return hits.select(id_col).distinct()
@@ -301,24 +229,11 @@ def search_terms(
 # writes its new files of both sets, then installs ONE commit that
 # adds and removes files in both and carries the corpus stats
 # (``n_docs``, ``dl_sum``, ``avgdl``, ``n_buckets``, ``n_idb``) as its
-# ``meta``. Readers pin one ``snapshot_state`` and take the stats and
-# the probed buckets' live files from it, so a query planned during an
-# append or a compaction sees one whole version. A crash before the
-# commit leaves only files no version references (``txlog.vacuum``
-# collects them), so a blind retry is always safe.
+# ``meta``; the commit and pinned-read rules are the ones every
+# persisted index shares (``txlog._commit_index``).
 # ---------------------------------------------------------------------------
 
 _SETS = ("bucket", "idb")  # postings, manifest: one partition column each
-
-
-def _snapshot(path: str) -> dict:
-    try:
-        return txlog.snapshot_state(path)
-    except FileNotFoundError:
-        raise ValueError(
-            f"index at {path} has no transaction log (built by an older "
-            "layout?) — rebuild with build_ranked_index"
-        ) from None
 
 
 def _manifest_ddl(postings_ddl: str) -> str:
@@ -336,19 +251,6 @@ def _manifest_ddl(postings_ddl: str) -> str:
     )
 
 
-def _files(state: dict, part: str, values=None) -> list[str]:
-    """Live files of one set (``part`` = ``"bucket"`` for postings,
-    ``"idb"`` for the manifest), optionally only those partition
-    values — chosen from the add actions, never by listing."""
-    want = None if values is None else {str(v) for v in values}
-    return sorted(
-        p
-        for p, a in state["files"].items()
-        if part in a["partition"]
-        and (want is None or a["partition"][part] in want)
-    )
-
-
 def _read(
     spark: SparkSession, path: str, state: dict, part: str, values=None
 ) -> DataFrame:
@@ -357,7 +259,7 @@ def _read(
         spark,
         path,
         state,
-        _files(state, part, values),
+        txlog._part_files(state, part, values),
         ddl if part == "bucket" else _manifest_ddl(ddl),
     )
 
@@ -367,32 +269,6 @@ def _write(df: DataFrame, path: str, part: str) -> list[dict]:
     actions. Clustering each partition into one task first keeps it to
     one file per partition value per write."""
     return txlog._write_data_files(df.repartition(part), path, [part])
-
-
-def _commit(
-    path: str,
-    base: int,
-    op: str,
-    meta: dict,
-    adds: list[dict],
-    removes=(),
-    schema: str | None = None,
-) -> None:
-    """Install version ``base + 1``: the file actions of both sets and
-    the stats, all or nothing. A lost race raises ``TxConflict`` rather
-    than re-basing: the stats were derived from version ``base``."""
-    commit = {
-        "op": op,
-        "meta": meta,
-        "actions": [{"remove": {"path": p}} for p in sorted(removes)]
-        + [{"add": a} for a in adds],
-    }
-    if schema is not None:
-        commit.update(schema=schema, partition_by=list(_SETS))
-    if not txlog._try_commit(path, base + 1, commit):
-        raise txlog.TxConflict(
-            f"index at {path} moved past version {base} during {op}; retry"
-        )
 
 
 def build_ranked_index(
@@ -477,11 +353,8 @@ def build_ranked_index(
             postings.unpersist()
     finally:
         tf.unpersist()
-    base = txlog.latest_version(path)
-    _commit(
+    txlog._commit_build(
         path,
-        base,
-        "build",
         {
             "n_docs": n_docs,
             "dl_sum": dl_sum,
@@ -490,8 +363,8 @@ def build_ranked_index(
             "n_idb": n_idb,
         },
         adds_p + adds_m,
-        txlog.snapshot_state(path)["files"] if base >= 0 else (),
-        schema=postings.schema.simpleString(),
+        postings.schema.simpleString(),
+        _SETS,
     )
 
 
@@ -576,7 +449,7 @@ def bm25_search_many(
     if not qids_of:
         raise ValueError("no non-empty query terms")
     terms = sorted(qids_of)
-    state = _snapshot(index_path)
+    state = txlog._index_state(index_path, "build_ranked_index")
     stats = state["meta"]
     n_docs, avgdl = stats["n_docs"], stats["avgdl"]
     n_buckets = _check_n_buckets(n_buckets, stats["n_buckets"], index_path)
@@ -683,7 +556,7 @@ def bm25_append_index(
     token has no postings and is not counted, exactly as in a build.
     Returns the number of documents appended."""
     spark = docs.sparkSession
-    state = _snapshot(path)
+    state = txlog._index_state(path, "build_ranked_index")
     stats = state["meta"]
     n_buckets, n_idb = stats["n_buckets"], stats["n_idb"]
 
@@ -737,7 +610,7 @@ def bm25_append_index(
         )
         n_docs = stats["n_docs"] + n_new
         dl_sum = stats["dl_sum"] + int(batch_row["s"])
-        _commit(
+        txlog._commit_index(
             path,
             state["version"],
             "append",
@@ -769,7 +642,7 @@ def bm25_delete_index(
     the call. Returns documents removed. Extra columns on ``ids``
     (e.g. the old text payload) are ignored."""
     spark = ids.sparkSession
-    state = _snapshot(path)
+    state = txlog._index_state(path, "build_ranked_index")
     stats = state["meta"]
 
     # The distinct ids are PERSISTED and every step reads them: the
@@ -821,14 +694,15 @@ def bm25_delete_index(
         id_set.unpersist()
     n_docs = stats["n_docs"] - n_gone
     dl_sum = stats["dl_sum"] - int(gone_row["s"] or 0)
-    _commit(
+    txlog._commit_index(
         path,
         state["version"],
         "delete",
         {**stats, "n_docs": n_docs, "dl_sum": dl_sum,
          "avgdl": (dl_sum / n_docs) if n_docs else 0.0},
         adds_p + adds_m,
-        _files(state, "bucket", buckets) + _files(state, "idb", idbs),
+        txlog._part_files(state, "bucket", buckets)
+        + txlog._part_files(state, "idb", idbs),
     )
     return n_gone
 
@@ -848,16 +722,17 @@ def bm25_compact_index(spark: SparkSession, path: str) -> dict:
     ``{"buckets_compacted", "idbs_compacted", "files_merged"}``."""
     from collections import Counter
 
-    state = _snapshot(path)
+    state = txlog._index_state(path, "build_ranked_index")
     frag = {}
     for part in _SETS:
         n_files = Counter(
-            state["files"][p]["partition"][part] for p in _files(state, part)
+            state["files"][p]["partition"][part]
+            for p in txlog._part_files(state, part)
         )
         frag[part] = sorted(v for v, n in n_files.items() if n >= 2)
-    removes = _files(state, "bucket", frag["bucket"]) + _files(
-        state, "idb", frag["idb"]
-    )
+    removes = txlog._part_files(
+        state, "bucket", frag["bucket"]
+    ) + txlog._part_files(state, "idb", frag["idb"])
     if removes:
         adds = await_all(
             *[
@@ -868,11 +743,11 @@ def bm25_compact_index(spark: SparkSession, path: str) -> dict:
                 if frag[part]
             ]
         )
-        _commit(
+        txlog._commit_index(
             path,
             state["version"],
             "compact",
-            state["meta"],
+            None,
             [a for leg in adds for a in leg],
             removes,
         )

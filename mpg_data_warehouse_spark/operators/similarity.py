@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (``array<float>``).
 
-Two paths, mirroring production vector-search practice:
+Three paths, mirroring production vector-search practice:
 
 * ``cosine_topk`` — exact brute force: broadcast the (small) query
   set against the corpus, one narrow map stage + TakeOrdered per
@@ -11,6 +11,10 @@ Two paths, mirroring production vector-search practice:
   bucketed path turns a full-corpus scan per query into a keyed
   join on bucket id. Hyperplanes are md5-derived (deterministic —
   no RNG state, resumable, identical across runs/engines).
+* ``ivf_topk`` / ``ivf_write_index`` — k-means cells: queries score
+  only their ``nprobe`` nearest cells' members. The persisted form is
+  one ``sources/txlog`` table (see the block comment above
+  ``ivf_write_index``).
 
 All arithmetic is elementwise-double fold (zip_with + aggregate),
 bit-identical to the DuckDB oracle's sequential fold — verified
@@ -22,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window as W
+
+from mpg_data_warehouse_spark.sources import txlog
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -276,16 +282,21 @@ def ivf_assign(
     )
 
 
+def _py_dot(a: list[float], b: list[float]) -> float:
+    """Driver-side replica of ``dot``'s sequential fold — same IEEE ops
+    in the same order (acc + aᵢ·bᵢ from 0.0), so a value computed here
+    is bit-identical to the in-plan column version."""
+    acc = 0.0
+    for x, y in zip(a, b):
+        acc = acc + float(x) * float(y)
+    return acc
+
+
 def _py_l2_norm(vec: list[float]) -> float:
-    """Driver-side replica of ``l2_norm``'s sequential fold — same
-    IEEE ops in the same order (acc + xᵢ·xᵢ, then sqrt), so a norm
-    computed here is bit-identical to the in-plan column version."""
+    """Driver-side replica of ``l2_norm`` (sqrt of ``_py_dot``)."""
     import math
 
-    acc = 0.0
-    for x in vec:
-        acc = acc + float(x) * float(x)
-    return math.sqrt(acc)
+    return math.sqrt(_py_dot(vec, vec))
 
 
 def with_nearest_cell(
@@ -481,6 +492,14 @@ def _collect_centroid_rows(
     return rows
 
 
+def _dim_error(what: str, got, want: int) -> ValueError:
+    return ValueError(
+        f"{what} vectors have length {got} but the index's centroids "
+        f"carry dim {want} — nearest-cell cosines would go NULL and "
+        "cell assignment would be arbitrary"
+    )
+
+
 def _check_dim_matches_centroids(
     df: DataFrame, vec_col: str, cent_rows: list, what: str
 ) -> None:
@@ -490,17 +509,13 @@ def _check_dim_matches_centroids(
     silently assigns ALL rows to one arbitrary cell (append) or
     probes arbitrary cells with null scores (query) — corrupted
     results, no error. The LSH paths gate both sides with
-    ``_check_dim``; the IVF entry points taking EXTERNAL data (an
-    append batch, a query set) need the same one-row probe."""
+    ``_check_dim``; ``ivf_topk``'s query set needs the same one-row
+    probe (a persisted index checks its query rows on the driver, see
+    ``_nearest_cells``)."""
     want = len(cent_rows[0][1])
     first = df.select(vec_col).first()
     if first is not None and first[0] is not None and len(first[0]) != want:
-        raise ValueError(
-            f"{what} vectors have length {len(first[0])} but the "
-            f"index's centroids carry dim {want} — nearest-cell "
-            "cosines would go NULL and cell assignment would be "
-            "arbitrary"
-        )
+        raise _dim_error(what, len(first[0]), want)
 
 
 def ivf_topk(
@@ -597,6 +612,38 @@ def _probe_cells(
     )
 
 
+def _nearest_cells(
+    q_rows: list, cent_rows: list, nprobe: int
+) -> list[tuple]:
+    """Driver-side twin of ``_probe_cells`` for a query batch already on
+    the driver: ``q_rows`` = [(query_id, vector)] → [(query_id, q_vec,
+    q_norm, cell)] for each query's ``nprobe`` nearest cells. The same
+    sequential-fold cosine and the same (cosine DESC, cell ASC) order
+    with a null (zero-norm) cosine last, so the chosen cells are
+    bit-identical (parity pinned by
+    ``test_driver_side_probe_cells_match_probe_cells``); no Spark job.
+    Raises on a query whose length is not the centroids' dim."""
+    want = len(cent_rows[0][1])
+    cent_norms = [_py_l2_norm(v) for _, v in cent_rows]
+    out = []
+    for qid, vec in q_rows:
+        if vec is None or len(vec) != want:
+            raise _dim_error("query", None if vec is None else len(vec), want)
+        vec = [float(x) for x in vec]
+        qn = _py_l2_norm(vec)
+
+        def key(i: int):
+            den = qn * cent_norms[i]
+            cell = cent_rows[i][0]
+            if den == 0:
+                return (1, 0.0, cell)
+            return (0, -(_py_dot(vec, cent_rows[i][1]) / den), cell)
+
+        for i in sorted(range(len(cent_rows)), key=key)[:nprobe]:
+            out.append((qid, vec, qn, cent_rows[i][0]))
+    return out
+
+
 def _score_probes(cells: DataFrame, probes: DataFrame, k: int) -> DataFrame:
     """Exact-cosine scoring of probed cell members + per-query top-k.
     ``cells``: (neighbor_id, c_vec, c_norm, cell). No distinct: a
@@ -628,26 +675,54 @@ def _score_probes(cells: DataFrame, probes: DataFrame, k: int) -> DataFrame:
     )
 
 
-def ivf_write_index(
+# ---------------------------------------------------------------------------
+# The persisted IVF index: ONE ``sources/txlog`` table. Its data files
+# are the inverted lists ``(neighbor_id, c_vec, c_norm)`` partitioned
+# by ``cell=``; its commit ``meta`` carries the centroid rows
+# ``[[cell, vector], …]`` (and, for a retrieval index, the encoder's
+# ``hash_fn``). Build, append and delete each write their new files,
+# then install ONE commit (``txlog._commit_index``); every probe pins
+# one ``snapshot_state`` and takes the centroids and the probed cells'
+# live files from it. The centroid set is |cells| × dim doubles — the
+# bound every caller already assumes when it ships the centroids as a
+# one-row broadcast; JSON floats round-trip doubles exactly.
+# ---------------------------------------------------------------------------
+
+_IVF_BUILDER = "ivf_write_index"
+
+
+def _ivf_read(
+    spark: SparkSession, path: str, state: dict, cells=None
+) -> DataFrame:
+    """The live inverted lists of a pinned version (only ``cells`` if
+    given), under the logged schema: no listing, no inference job."""
+    return txlog.read_subset(
+        spark,
+        path,
+        state,
+        txlog._part_files(state, "cell", cells),
+        state["schema"],
+    )
+
+
+def _write_cells(cells: DataFrame, path: str) -> list[dict]:
+    """Write inverted lists as new (not yet visible) files; clustering
+    each cell into one task first keeps it to one file per cell per
+    write (unclustered: tasks × cells small files)."""
+    return txlog._write_data_files(cells.repartition("cell"), path, ["cell"])
+
+
+def _write_ivf_index(
     corpus: DataFrame,
     path: str,
-    n_centroids: int = 16,
-    refine_iters: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    n_centroids: int,
+    refine_iters: int,
+    id_col: str,
+    vec_col: str,
+    extra_meta: dict | None = None,
 ) -> None:
-    """Persist the IVF index at rest: the corpus written PARTITIONED
-    BY cell (one directory per inverted list) plus the centroid table
-    under ``<path>/_centroids`` (underscore-prefixed, so a plain
-    parquet read of ``path`` never picks it up as data).
-
-    This is the offline index-build pass of the 100 TB shape: the
-    corpus is scanned once (map-only broadcast argmax assignment, see
-    ``with_nearest_cell``), then laid out so every future probe is a
-    partition-PRUNED scan of nprobe inverted lists — no shuffle, no
-    full-corpus read, no index structure beyond the filesystem
-    layout. Centroids are deterministic (``kmeans_refine_centroids``),
-    so rebuilding the index on the same corpus is idempotent."""
+    """``ivf_write_index`` with ``extra_meta`` riding the same commit
+    as the centroids (the retrieval index's encoder)."""
     if refine_iters > 0:
         centroids = kmeans_refine_centroids(
             corpus, n_centroids, refine_iters, id_col=id_col, vec_col=vec_col
@@ -665,13 +740,42 @@ def ivf_write_index(
         "c_vec",
         "c_norm",
     )
-    # cluster each cell into one task before the partitioned write —
-    # unclustered, every shuffle task writes a file into every cell it
-    # touches (tasks × cells small files; measured 2.3 s → 0.8 s here)
-    cells.repartition("cell").write.mode("overwrite").partitionBy(
-        "cell"
-    ).parquet(path)
-    centroids.write.mode("overwrite").parquet(f"{path}/_centroids")
+    txlog._commit_build(
+        path,
+        {"centroids": [[c, v] for c, v in cent_rows], **(extra_meta or {})},
+        _write_cells(cells, path),
+        cells.schema.simpleString(),
+        ["cell"],
+    )
+
+
+def ivf_write_index(
+    corpus: DataFrame,
+    path: str,
+    n_centroids: int = 16,
+    refine_iters: int = 1,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> None:
+    """Persist the IVF index at rest: the corpus assigned to its
+    nearest centroid and written as one inverted list per cell, and
+    the centroids, installed together as one commit of a txlog table.
+
+    This is the offline index-build pass of the 100 TB shape: the
+    corpus is scanned once (map-only broadcast argmax assignment, see
+    ``with_nearest_cell``), then laid out so every future probe reads
+    the live files of nprobe cells only — no shuffle, no full-corpus
+    read. Centroids are deterministic (``kmeans_refine_centroids``),
+    so rebuilding the index on the same corpus is idempotent; a
+    rebuild over an existing index is one more commit that replaces
+    every live file, so a probe never sees a half-written index."""
+    _write_ivf_index(
+        corpus, path, n_centroids, refine_iters, id_col, vec_col
+    )
+
+
+def _centroid_rows(state: dict) -> list[tuple[int, list[float]]]:
+    return [(int(c), v) for c, v in state["meta"]["centroids"]]
 
 
 def ivf_append_index(
@@ -682,56 +786,151 @@ def ivf_append_index(
     vec_col: str = "embedding",
 ) -> int:
     """Incrementally maintain a persisted IVF index: assign a NEW
-    batch of vectors to the index's FROZEN centroids and append them
-    to the matching cell partitions — the continual-ingest shape
-    (like ``dedup.incremental_minhash_pairs`` for signatures): daily
-    vector arrivals cost O(|batch|), never an O(|corpus|) rebuild.
+    batch of vectors to the index's FROZEN centroids and add them to
+    the matching cells — the continual-ingest shape (like
+    ``dedup.incremental_minhash_pairs`` for signatures): daily vector
+    arrivals cost O(|batch|), never an O(|corpus|) rebuild. One
+    add-only commit; probes planned after it see the new vectors.
 
     Centroids are deliberately not updated — the real-world IVF
     maintenance policy (FAISS-style): assignment must stay consistent
     with the lists already on disk, so centroids only move on an
     explicit offline re-build (``ivf_write_index``), typically when
-    drift degrades recall. Probes see appended vectors immediately:
-    ``ivf_probe_index`` reads the cell partitions, and dynamic
-    partition append only touches the cells the batch lands in.
+    drift degrades recall.
 
-    Replay guard: batch ids already present in the index are dropped
-    (anti-join on the bounded probe side), so at-least-once upstream
-    delivery cannot double-insert a vector. Returns the number of
-    vectors appended."""
-    centroids = spark.read.parquet(f"{path}/_centroids")
-    cent_rows = _collect_centroid_rows(centroids)
-    _check_dim_matches_centroids(new_vectors, vec_col, cent_rows, "batch")
+    Replay guard: duplicate ids WITHIN the batch collapse first
+    (at-least-once delivery can repeat an id inside one batch, where
+    the index can't see it), then ids already live in the pinned
+    version are dropped, so redelivery cannot double-insert a vector.
+    The deduplicated batch is persisted and read once: the count, the
+    dimension check (every row against the centroids) and the write
+    see the same rows. Returns the number of vectors appended."""
+    state = txlog._index_state(path, _IVF_BUILDER)
+    cent_rows = _centroid_rows(state)
     fresh = (
         new_vectors.select(
             F.col(id_col).alias("neighbor_id"),
             F.col(vec_col).alias("c_vec"),
             l2_norm(F.col(vec_col)).alias("c_norm"),
         )
-        # in-batch dup collapse FIRST: at-least-once delivery can
-        # duplicate an id WITHIN one batch, where the index anti-join
-        # below can't see it (neither copy is indexed yet) — the same
-        # rule the streaming idempotent_append_stream applies
         .dropDuplicates(["neighbor_id"])
         .join(
-            spark.read.parquet(path).select("neighbor_id"),
+            _ivf_read(spark, path, state).select("neighbor_id"),
             "neighbor_id",
             "left_anti",
         )
+        .persist()
     )
-    # Materialize BEFORE writing: the anti-join plan reads `path`, and
-    # appending to a path an in-flight plan is scanning is a
-    # read-own-write race. The checkpoint is |batch|-sized.
-    cells = with_nearest_cell(
-        fresh, cent_rows, "c_vec", "c_norm"
-    ).localCheckpoint()
-    n = cells.count()
-    if n:
-        # clustered append: one task per touched cell, not tasks×cells
-        cells.repartition("cell").write.mode("append").partitionBy(
-            "cell"
-        ).parquet(path)
+    try:
+        row = fresh.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.min(F.size("c_vec")).alias("lo"),
+            F.max(F.size("c_vec")).alias("hi"),
+        ).first()
+        n = int(row["n"])
+        if n == 0:
+            return 0
+        want = len(cent_rows[0][1])
+        if row["lo"] != want or row["hi"] != want:
+            got = row["lo"] if row["lo"] != want else row["hi"]
+            raise _dim_error("batch", got, want)
+        cells = with_nearest_cell(fresh, cent_rows, "c_vec", "c_norm")
+        txlog._check_schema(state, cells)
+        adds = _write_cells(cells, path)
+    finally:
+        fresh.unpersist()
+    txlog._commit_index(path, state["version"], "append", None, adds)
     return n
+
+
+def ivf_delete_index(
+    spark,
+    path: str,
+    ids: DataFrame,
+    id_col: str = "vec_id",
+) -> int:
+    """Targeted deletion from a persisted IVF index (the
+    right-to-be-forgotten path): one id semi-join over the pinned
+    version finds the cells holding the requested ids (the delete
+    batch broadcasts), and ONLY those cells' survivors are rewritten,
+    in one commit that removes the hit cells' files. Untouched cells
+    keep their exact files; a cell whose every vector is deleted is
+    left with no live file. Probes planned after the commit no longer
+    see the ids; the removed files stay on disk for readers pinned to
+    older versions until ``txlog.vacuum`` erases them, as for
+    ``search.bm25_delete_index``. ``ids`` is read once (its distinct
+    ids are persisted for the call). Returns vectors removed."""
+    state = txlog._index_state(path, _IVF_BUILDER)
+    id_set = ids.select(F.col(id_col).alias("neighbor_id")).distinct().persist()
+    try:
+        del_ids = F.broadcast(id_set)
+        hit = (
+            _ivf_read(spark, path, state)
+            .join(del_ids, "neighbor_id", "left_semi")
+            .groupBy("cell")
+            .count()
+            .collect()
+        )
+        if not hit:
+            return 0
+        cells = sorted(r["cell"] for r in hit)
+        adds = _write_cells(
+            _ivf_read(spark, path, state, cells).join(
+                del_ids, "neighbor_id", "left_anti"
+            ),
+            path,
+        )
+    finally:
+        id_set.unpersist()
+    txlog._commit_index(
+        path,
+        state["version"],
+        "delete",
+        None,
+        adds,
+        txlog._part_files(state, "cell", cells),
+    )
+    return sum(r["count"] for r in hit)
+
+
+def _literal_rows(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
+    """``rows`` (tuples in the column order of ``ddl``) as a frame
+    planned in the JVM: one literal array of structs, inlined over a
+    one-row range. A request's query batch is a few rows;
+    ``spark.createDataFrame`` would plan it as a Python RDD, and every
+    job that reads it would start a Python worker to unpickle them."""
+    arr = F.array(*(F.struct(*(F.lit(v) for v in row)) for row in rows))
+    return spark.range(1, numPartitions=1).select(
+        F.inline(arr.cast(f"array<struct<{ddl}>>"))
+    )
+
+
+def _probe_pinned(
+    spark: SparkSession,
+    path: str,
+    state: dict,
+    q_rows: list,
+    k: int,
+    nprobe: int,
+    id_type: str = "bigint",
+) -> DataFrame:
+    """The one probe core of a persisted IVF index: ``q_rows`` =
+    [(query_id, vector)] on the driver, ``state`` one pinned version.
+    The cells are chosen on the driver (``_nearest_cells``, which also
+    checks the query dimension), the probe rows enter the plan as
+    literals, and the scan reads only the probed cells' live files of
+    that version. Output: (query_id, neighbor_id, cos_sim, rank)."""
+    probe_rows = _nearest_cells(q_rows, _centroid_rows(state), nprobe)
+    probes = _literal_rows(
+        spark,
+        probe_rows,
+        f"query_id {id_type}, q_vec array<double>, q_norm double, "
+        "cell bigint",
+    )
+    cells = _ivf_read(
+        spark, path, state, sorted({r[3] for r in probe_rows})
+    )
+    return _score_probes(cells, probes, k)
 
 
 def ivf_probe_index(
@@ -743,30 +942,20 @@ def ivf_probe_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Query a persisted IVF index (``ivf_write_index``): pick each
-    query's ``nprobe`` cells against the stored centroids, then scan
-    ONLY those cell partitions — the probe-cell set is collected to
-    the driver (bounded by ``n_centroids``, a few ints) and pushed as
-    a partition filter, so the executed plan reads nprobe inverted
-    lists and the rest of the corpus is never opened
-    (``PartitionFilters`` in the scan proves it). Scoring and
-    ranking are byte-identical to the in-flight ``ivf_topk``, so a
-    persisted index returns exactly the same top-k."""
-    centroids = spark.read.parquet(f"{path}/_centroids")
-    _check_dim_matches_centroids(
-        queries, vec_col, _collect_centroid_rows(centroids), "query"
+    """Query a persisted IVF index (``ivf_write_index``): the query
+    set is collected (bounded by the caller: a query batch), each
+    query's ``nprobe`` cells are picked against the centroids of one
+    pinned version, and the scan opens ONLY those cells' live files of
+    that version — the rest of the corpus is never opened, and a frame
+    collected after a later change answers from the version it was
+    planned on. Scoring and ranking are byte-identical to the
+    in-flight ``ivf_topk``, so a persisted index returns exactly the
+    same top-k."""
+    state = txlog._index_state(path, _IVF_BUILDER)
+    q_rows = [tuple(r) for r in queries.select(id_col, vec_col).collect()]
+    return _probe_pinned(
+        spark, path, state, q_rows, k, nprobe, dict(queries.dtypes)[id_col]
     )
-    # lineage cut: the probe ranking (centroid read + cross join +
-    # window) feeds BOTH the driver-side cell collect and the scoring
-    # join — without it the plan executes twice per query batch
-    probes = _probe_cells(
-        queries, centroids, nprobe, id_col, vec_col
-    ).localCheckpoint(eager=False)
-    probe_cells = sorted(
-        r.cell for r in probes.select("cell").distinct().collect()
-    )
-    cells = spark.read.parquet(path).filter(F.col("cell").isin(probe_cells))
-    return _score_probes(cells, probes, k)
 
 
 def embedding_near_dup_pairs(
@@ -1320,69 +1509,3 @@ def ivfpq_topk(
         "rank", F.row_number().over(w).cast("long")
     ).filter(F.col("rank") <= k)
 
-
-def ivf_delete_index(
-    spark,
-    path: str,
-    ids: DataFrame,
-    id_col: str = "vec_id",
-) -> int:
-    """Targeted deletion from a persisted IVF index (the
-    right-to-be-forgotten path): rewrite ONLY the cell partitions
-    that contain the requested ids — found with one id-semi-join over
-    the index (the delete batch broadcasts), then a dynamic partition
-    overwrite of the survivors. Cells whose every vector is deleted
-    have their partition directory removed (dynamic overwrite cannot
-    express an empty partition). Probes see the deletion immediately;
-    untouched cells keep their exact files. Returns vectors removed.
-
-    Survivors are materialized (localCheckpoint) before the
-    overwrite because their lineage READS the path being rewritten —
-    bounded by the hit cells' volume, not the index."""
-    import os
-
-    from mpg_data_warehouse_spark.operators.append import (
-        overwrite_partitions,
-    )
-    from mpg_data_warehouse_spark.sources.storage import (
-        get_storage_backend,
-    )
-
-    del_ids = F.broadcast(
-        ids.select(F.col(id_col).alias("neighbor_id")).distinct()
-    )
-    idx = spark.read.parquet(path)
-    hit_cells = sorted(
-        r["cell"]
-        for r in idx.join(del_ids, "neighbor_id", "left_semi")
-        .select("cell")
-        .distinct()
-        .collect()
-    )
-    if not hit_cells:
-        return 0
-    scoped = idx.filter(F.col("cell").isin(hit_cells))
-    survivors = scoped.join(del_ids, "neighbor_id", "left_anti").select(
-        "neighbor_id", "c_vec", "c_norm", "cell"
-    ).localCheckpoint()
-    n_before = scoped.count()
-    n_after = survivors.count()
-    kept_cells = {
-        r["cell"] for r in survivors.select("cell").distinct().collect()
-    }
-    backend = get_storage_backend()
-    overwrite_partitions(spark, survivors, path, ("cell",))
-    for cell in hit_cells:
-        if cell not in kept_cells:
-            backend.delete_prefix(os.path.join(path, f"cell={cell}"))
-    # a wipe that removed every vector must leave the index readable
-    # (and appendable): an empty hive partition carries the schema
-    # without conflicting with later partitioned appends
-    from mpg_data_warehouse_spark.sources.writers import (
-        ensure_readable_partition_layout,
-    )
-
-    ensure_readable_partition_layout(
-        path, survivors.drop("cell"), part_dir="cell=0"
-    )
-    return n_before - n_after

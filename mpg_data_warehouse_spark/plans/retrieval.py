@@ -17,7 +17,9 @@ module keeps that boundary explicit:
 Scale: chunking is a narrow map; embedding is one explode + (chunk,
 bucket) hash-agg + dense assembly (shuffle carries one row per
 non-zero bucket per chunk, never text); the index build/probe story
-is ``ivf_write_index``'s — probes scan nprobe partitions only.
+is ``ivf_write_index``'s — probes read nprobe cells' files only. The
+chunk store and the IVF index are txlog tables (``sources/txlog``):
+each build is one commit, and each request reads pinned versions.
 """
 
 from __future__ import annotations
@@ -27,51 +29,34 @@ from pyspark.sql import functions as F
 
 from mpg_data_warehouse_spark.operators.chunking import pack_sequences
 from mpg_data_warehouse_spark.operators.similarity import (
-    ivf_write_index,
+    _IVF_BUILDER,
+    _literal_rows,
+    _probe_pinned,
+    _write_ivf_index,
     l2_norm,
 )
 from mpg_data_warehouse_spark.operators.text import norm_tokens
-
-RETRIEVAL_META = "_retrieval_meta.json"
-
-
-def _write_retrieval_meta(index_path: str, dim: int, hash_fn: str) -> None:
-    import os
-
-    from mpg_data_warehouse_spark.sources.storage import write_json_atomic
-
-    write_json_atomic(
-        os.path.join(index_path, RETRIEVAL_META),
-        {"dim": dim, "hash_fn": hash_fn},
-    )
+from mpg_data_warehouse_spark.sources import txlog
 
 
-def _resolve_encoder(index_path: str, dim: int, hash_fn: str):
-    """The index records which encoder built it; a probe embedding
-    queries in a DIFFERENT feature space (other hash_fn or dim) would
-    return near-random neighbors with no error — same silent-mismatch
-    class the search-index n_buckets sidecar closes. Explicit caller
-    values are validated against the sidecar; older indexes without
-    one keep the caller's values."""
-    import os
-
-    from mpg_data_warehouse_spark.sources.storage import (
-        get_storage_backend,
-        read_json,
-    )
-
-    meta_path = os.path.join(index_path, RETRIEVAL_META)
-    if not get_storage_backend().exists(meta_path):
-        return dim, hash_fn
-    meta = read_json(meta_path)
-    if dim != meta["dim"] or hash_fn != meta["hash_fn"]:
+def _check_encoder(state: dict, index_path: str, dim: int, hash_fn: str):
+    """The index records which encoder built it — ``hash_fn`` in the
+    build commit's ``meta``, ``dim`` as the centroid length; a probe
+    embedding queries in a DIFFERENT feature space (other hash_fn or
+    dim) would return near-random neighbors with no error. Checked
+    against the same pinned version the probe reads. An index built by
+    a bare ``ivf_write_index`` records no ``hash_fn``; only its dim is
+    checked."""
+    meta = state["meta"]
+    built_dim = len(meta["centroids"][0][1])
+    built_fn = meta.get("hash_fn", hash_fn)
+    if dim != built_dim or hash_fn != built_fn:
         raise ValueError(
-            f"index at {index_path} was built with dim={meta['dim']}, "
-            f"hash_fn={meta['hash_fn']!r}; the probe requested dim={dim}, "
+            f"index at {index_path} was built with dim={built_dim}, "
+            f"hash_fn={built_fn!r}; the probe requested dim={dim}, "
             f"hash_fn={hash_fn!r} — query vectors would live in a "
             "different feature space and neighbors would be meaningless"
         )
-    return meta["dim"], meta["hash_fn"]
 
 
 def _tok_bucket_sign(tok, dim: int, hash_fn: str):
@@ -269,18 +254,6 @@ def _rowwise_query_embedding(
     return _unit_from_sparse_map(with_map, dim, out_col)
 
 
-def _literal_rows(spark: SparkSession, rows: list, ddl: str) -> DataFrame:
-    """``rows`` (tuples in the column order of ``ddl``) as a frame
-    planned in the JVM: one literal array of structs, inlined over a
-    one-row range. A request's query batch is a few rows;
-    ``spark.createDataFrame`` would plan it as a Python RDD, and every
-    job that reads it would start a Python worker to unpickle them."""
-    arr = F.array(*(F.struct(*(F.lit(v) for v in row)) for row in rows))
-    return spark.range(1, numPartitions=1).select(
-        F.inline(arr.cast(f"array<struct<{ddl}>>"))
-    )
-
-
 def _query_text(query_texts: list[str]):
     """``query_texts[query_id]`` as a literal array lookup: attaches
     the query text to result rows with no join."""
@@ -297,20 +270,28 @@ def _write_chunk_store(
     text_col: str,
 ) -> DataFrame:
     """Chunk the corpus and persist the chunk store (id → text, for
-    hydration). Chunk ids are dense ``doc_id * 2^20 + chunk_id``
-    composites — deterministic, reversible, collision-free for docs
-    under 2^20 chunks. Returns a reader over the written store."""
+    hydration) as a txlog table: created at version 0, or replaced by
+    one overwrite commit. Chunk ids are dense ``doc_id * 2^20 +
+    chunk_id`` composites — deterministic, reversible, collision-free
+    for docs under 2^20 chunks. Returns a reader over the written
+    version."""
+    spark = docs.sparkSession
     chunks = pack_sequences(
         docs, id_col, text_col, max_tokens=max_tokens, overlap=overlap
-    ).withColumn(
-        "chunk_key",
-        (F.col(id_col).cast("long") * F.lit(1 << 20))
-        + F.col("chunk_id").cast("long"),
+    ).select(
+        (
+            F.col(id_col).cast("long") * F.lit(1 << 20)
+            + F.col("chunk_id").cast("long")
+        ).alias("chunk_key"),
+        id_col,
+        "chunk_id",
+        "chunk_text",
     )
-    chunks.select(
-        "chunk_key", id_col, "chunk_id", "chunk_text"
-    ).write.mode("overwrite").parquet(chunks_path)
-    return docs.sparkSession.read.parquet(chunks_path)
+    if txlog.latest_version(chunks_path) < 0:
+        txlog.create(spark, chunks_path, chunks)
+    else:
+        txlog.overwrite(spark, chunks_path, chunks, new_schema=True)
+    return txlog.read(spark, chunks_path)
 
 
 def _build_dense_index(
@@ -321,7 +302,8 @@ def _build_dense_index(
     hash_fn: str,
     refine_iters: int = 1,
 ) -> None:
-    """Embed the chunk store and lay down the IVF index over it."""
+    """Embed the chunk store and lay down the IVF index over it; the
+    encoder's ``hash_fn`` rides the index's build commit."""
     # Persist the embedded corpus before the IVF build: k-means
     # seeding, each Lloyd iteration, and the final cell assignment
     # all consume it, and without reuse the encoder's multi-shuffle
@@ -340,17 +322,17 @@ def _build_dense_index(
         .persist()
     )
     try:
-        ivf_write_index(
+        _write_ivf_index(
             embedded,
             index_path,
-            n_centroids=n_centroids,
-            refine_iters=refine_iters,
-            id_col="chunk_key",
-            vec_col="embedding",
+            n_centroids,
+            refine_iters,
+            "chunk_key",
+            "embedding",
+            {"hash_fn": hash_fn},
         )
     finally:
         embedded.unpersist()
-    _write_retrieval_meta(index_path, dim, hash_fn)
 
 
 def build_retrieval_index(
@@ -392,28 +374,14 @@ def _probe_chunk_ranks(
     fusion would scan the chunk store twice per call)."""
     if not query_texts:
         raise ValueError("query_texts is empty")
-    dim, hash_fn = _resolve_encoder(index_path, dim, hash_fn)
+    # the encoder check and the probe read ONE pinned version
+    state = txlog._index_state(index_path, _IVF_BUILDER)
+    _check_encoder(state, index_path, dim, hash_fn)
+    # ONE narrow job embeds the batch (shuffle-free row-wise twin,
+    # values identical — see _rowwise_query_embedding); the query texts
+    # enter as JVM literals. Everything after it is the persisted-index
+    # probe core: cells chosen on the driver, only their files scanned.
     neg_ids = [(-(i + 1), t) for i, t in enumerate(query_texts)]
-    # The query batch is a bounded driver-side list, so everything up
-    # to the corpus-scale scoring join is driver-sized work. ONE narrow
-    # job embeds the batch (shuffle-free row-wise twin, values
-    # identical — see _rowwise_query_embedding), the centroid table is
-    # collected once (bounded: |cells| × dim), and nprobe-cell
-    # selection replays _probe_cells' exact arithmetic in Python — the
-    # same sequential-fold dot product, sqrt norms and (cosine DESC,
-    # cell ASC) ordering, so the chosen cells are bit-identical (parity
-    # pinned by test_driver_side_probe_cells_match_probe_cells). The
-    # query texts and the probe rows enter their plans as JVM literals
-    # (_literal_rows), never as Python RDDs. The scoring join + top-k
-    # stays distributed and partition-pruned (_score_probes over the
-    # nprobe cell directories only).
-    import math
-
-    from mpg_data_warehouse_spark.operators.similarity import (
-        _collect_centroid_rows,
-        _score_probes,
-    )
-
     queries = _rowwise_query_embedding(
         _literal_rows(spark, neg_ids, "chunk_key bigint, q_text string"),
         "q_text",
@@ -421,47 +389,9 @@ def _probe_chunk_ranks(
         hash_fn=hash_fn,
     )
     q_rows = [
-        (r["chunk_key"], r["embedding"])
-        for r in queries.select("chunk_key", "embedding").collect()
+        tuple(r) for r in queries.select("chunk_key", "embedding").collect()
     ]
-    centroids = spark.read.parquet(f"{index_path}/_centroids")
-    cent_rows = _collect_centroid_rows(centroids)
-    want = len(cent_rows[0][1])
-
-    def _dot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += x * y
-        return acc
-
-    cent_norms = [math.sqrt(_dot(v, v)) for _, v in cent_rows]
-    probe_rows = []
-    for qid, vec in q_rows:
-        if len(vec) != want:
-            raise ValueError(
-                f"query vectors have length {len(vec)} but the index's "
-                f"centroids carry dim {want} — nearest-cell cosines "
-                "would go NULL and cell assignment would be arbitrary"
-            )
-        qn = math.sqrt(_dot(vec, vec))
-        ranked = sorted(
-            (-(_dot(vec, cv) / (qn * cn)), cell)
-            for (cell, cv), cn in zip(cent_rows, cent_norms)
-        )
-        for _, cell in ranked[:nprobe]:
-            probe_rows.append((qid, vec, qn, cell))
-    cell_type = dict(centroids.dtypes)["cent_id"]
-    probes = _literal_rows(
-        spark,
-        probe_rows,
-        f"query_id bigint, q_vec array<double>, q_norm double, "
-        f"cell {cell_type}",
-    )
-    probe_cells = sorted({cell for *_rest, cell in probe_rows})
-    cells = spark.read.parquet(index_path).filter(
-        F.col("cell").isin(probe_cells)
-    )
-    hits = _score_probes(cells, probes, k)
+    hits = _probe_pinned(spark, index_path, state, q_rows, k, nprobe)
     return hits.withColumnRenamed("neighbor_id", "chunk_key").withColumn(
         "query_id", -F.col("query_id") - 1
     )
@@ -479,8 +409,10 @@ def retrieve(
 ) -> DataFrame:
     """Online half: embed the query strings with the SAME encoder
     (including the same ``hash_fn`` the index was built with),
-    probe the persisted index (partition-pruned — only nprobe cells
-    open), and hydrate the winning chunks' text from the chunk store.
+    probe the persisted index (only nprobe cells' files open), and
+    hydrate the winning chunks' text from the chunk store. The frame
+    reads pinned versions of both tables: collected after a later
+    index change, it answers from the versions it was planned on.
     Output: (query_id, query_text, chunk_key, doc_id, chunk_id,
     chunk_text, cos_sim, rank); ``query_id`` is the position in
     ``query_texts``.
@@ -494,7 +426,7 @@ def retrieve(
     hits = _probe_chunk_ranks(
         spark, index_path, query_texts, k, dim, nprobe, hash_fn
     )
-    chunks = spark.read.parquet(chunks_path)
+    chunks = txlog.read(spark, chunks_path)
     return (
         hits.join(chunks, "chunk_key")
         .select(
@@ -587,9 +519,9 @@ def hybrid_retrieve(
     from mpg_data_warehouse_spark.concurrency import await_all
     from mpg_data_warehouse_spark.operators.search import bm25_search_many
 
-    # The dense leg's PREP runs Spark jobs on the driver (embed the
-    # query batch, collect the centroids); the lexical leg's reads the
-    # index's pinned txlog state. They are independent work against
+    # The dense leg's PREP runs a Spark job on the driver (embed the
+    # query batch); the lexical leg's reads the index's pinned txlog
+    # state. They are independent work against
     # disjoint indexes, so the two legs are constructed from separate
     # driver threads (the build-side pattern of build_hybrid_index,
     # applied to the probe side): the slot pays max(prep_d, prep_l),
@@ -642,7 +574,7 @@ def hybrid_retrieve(
     top = fused.withColumn(
         "rank", F.row_number().over(w).cast("long")
     ).filter(F.col("rank") <= k)
-    chunks = spark.read.parquet(chunks_path)
+    chunks = txlog.read(spark, chunks_path)
     return (
         top.join(chunks, "chunk_key")
         .select(

@@ -2,10 +2,10 @@
 
 The data plane (parquet part files, Avro blocks) is Spark's own
 Hadoop-filesystem story and needs no help here. What DOES need a
-seam is the engine's control plane: JSON sidecars (`_index_meta`,
-`_bloom_meta`), atomic directory installs
-(truncate-replace, compaction, Avro staging swaps), and partition
-prefix deletes (index deletion/maintenance). Round 5 gave the
+seam is the engine's control plane: JSON sidecars (`_bloom_meta`,
+`_bloom_index_meta`), atomic directory installs
+(truncate-replace, compaction, Avro staging swaps), and prefix
+deletes (partition-version rollback, staging cleanup). Round 5 gave the
 transaction log a pluggable ``CommitBackend`` (``txlog.py:160``) —
 this module extends the same design to the rest of the engine, so a
 100 TB object-store deployment injects ONE backend instead of
@@ -195,22 +195,6 @@ def set_storage_backend(backend: StorageBackend) -> StorageBackend:
     prev = _BACKEND
     _BACKEND = backend
     return prev
-
-
-def has_visible_data_files(prefix: str) -> bool:
-    """True iff a Spark-visible parquet file exists under ``prefix``
-    — files inside ``_``- or ``.``-prefixed directories (manifests,
-    ``_centroids``, metadata) are invisible to Spark's file listing
-    and must not count."""
-    root = prefix.rstrip("/")
-    for f in get_storage_backend().list_files(root):
-        rel = f[len(root):].lstrip("/")
-        parts = rel.split("/")
-        if any(p.startswith(("_", ".")) for p in parts):
-            continue
-        if rel.endswith(".parquet"):
-            return True
-    return False
 
 
 def read_json(path: str) -> dict:

@@ -508,6 +508,94 @@ def read_subset(
     return _read_files(spark, table, {**state, "schema": schema}, rel_paths)
 
 
+# ---------------------------------------------------------------------------
+# persisted indexes on the log
+#
+# Every persisted index (the ranked BM25 index, the IVF index) is one
+# table here. A change writes its new data files, then installs ONE
+# commit that adds and removes files and carries the index's own state
+# (corpus stats, centroids, encoder) as ``meta``. Readers pin one
+# ``snapshot_state`` and take that state and the live files of the
+# partitions they probe from it, so a query planned during a change
+# sees one whole version, and a crash before the commit leaves only
+# files no version references (``vacuum`` collects them), which makes
+# a blind retry always safe.
+# ---------------------------------------------------------------------------
+
+
+def _index_state(path: str, builder: str) -> dict:
+    """``snapshot_state`` of an index, or the "rebuild" ``ValueError``
+    for a directory laid out before its index moved onto the log."""
+    try:
+        return snapshot_state(path)
+    except FileNotFoundError:
+        raise ValueError(
+            f"index at {path} has no transaction log (built by an older "
+            f"layout?) — rebuild with {builder}"
+        ) from None
+
+
+def _part_files(state: dict, part: str, values=None) -> list[str]:
+    """Live files carrying partition column ``part``, optionally only
+    those partition values — chosen from the add actions, never by
+    listing."""
+    want = None if values is None else {str(v) for v in values}
+    return sorted(
+        p
+        for p, a in state["files"].items()
+        if part in a["partition"]
+        and (want is None or a["partition"][part] in want)
+    )
+
+
+def _commit_index(
+    path: str,
+    base: int,
+    op: str,
+    meta: dict | None,
+    adds: list[dict],
+    removes=(),
+    schema: str | None = None,
+    partition_by: list[str] | None = None,
+) -> None:
+    """Install version ``base + 1``: the file actions and the index
+    ``meta``, all or nothing (``meta=None`` carries version ``base``'s
+    forward unchanged). A lost race raises ``TxConflict`` rather than
+    re-basing: the change was derived from version ``base``. A build
+    passes ``schema`` and ``partition_by``."""
+    commit = {
+        "op": op,
+        "actions": [{"remove": {"path": p}} for p in sorted(removes)]
+        + [{"add": a} for a in adds],
+    }
+    if meta is not None:
+        commit["meta"] = meta
+    if schema is not None:
+        commit.update(schema=schema, partition_by=list(partition_by or []))
+    if not _try_commit(path, base + 1, commit):
+        raise TxConflict(
+            f"index at {path} moved past version {base} during {op}; retry"
+        )
+
+
+def _commit_build(
+    path: str, meta: dict, adds: list[dict], schema: str, partition_by
+) -> None:
+    """A (re)build: one commit that installs the new files and removes
+    every file live at the current head."""
+    base = latest_version(path)
+    _commit_index(
+        path,
+        base,
+        "build",
+        meta,
+        adds,
+        snapshot_state(path)["files"] if base >= 0 else (),
+        schema=schema,
+        partition_by=partition_by,
+    )
+
+
 def _commit_retry(table: str, build_commit) -> int:
     """Optimistic-concurrency loop: ``build_commit(state)`` returns the
     commit dict for the state it read; retried against a fresh state if

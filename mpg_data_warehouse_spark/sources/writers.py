@@ -355,27 +355,3 @@ def write_training_shards(
         if persisted:
             df.unpersist()
 
-
-def ensure_readable_partition_layout(
-    path: str, template, part_dir: str
-) -> None:
-    """A partitioned layout with ZERO part files (all-empty build, or
-    a delete that wiped every row) fails schema inference on the next
-    read with a confusing AnalysisException. Leave a zero-row
-    schema-carrying file INSIDE a partition-style directory (e.g.
-    ``bucket=0``) — a plain root file would conflict with later
-    partitioned appends (Spark rejects mixed layouts), whereas an
-    empty hive partition composes with them. ``template`` must carry
-    the non-partition columns only. Shared by the inverted-index build
-    and the IVF index maintenance paths."""
-    import os
-
-    from mpg_data_warehouse_spark.sources.storage import (
-        has_visible_data_files,
-    )
-
-    if has_visible_data_files(path):
-        return
-    template.limit(0).write.mode("append").parquet(
-        os.path.join(path, part_dir)
-    )

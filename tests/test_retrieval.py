@@ -280,7 +280,8 @@ def test_rerank_composes_with_hybrid(spark, tmp_path):
 def test_probe_validates_encoder_against_index_sidecar(spark, tmp_path):
     """A probe with a different dim/hash_fn than the index was built
     with would embed queries in another feature space and return
-    near-random neighbors silently; the sidecar makes it raise."""
+    near-random neighbors silently; the encoder recorded in the
+    index's build commit makes it raise."""
     import pytest
 
     idx = str(tmp_path / "idx")
@@ -373,18 +374,18 @@ def test_rowwise_query_embedding_matches_corpus_plan(spark):
 
 
 def test_driver_side_probe_cells_match_probe_cells(spark, tmp_path):
-    """_probe_chunk_ranks selects nprobe cells driver-side (r13); the
-    chosen (query, cell) set must equal what the distributed
-    _probe_cells window picks — same sequential-fold cosine, same
-    (cos DESC, cell ASC) order — for every nprobe."""
-    import math
-
-    from pyspark.sql import Row
-
+    """A persisted-index probe selects nprobe cells on the driver
+    (``_nearest_cells``, over the centroids of the index's commit
+    ``meta``); the chosen (query, cell) set must equal what the
+    distributed ``_probe_cells`` window picks — same sequential-fold
+    cosine, same (cos DESC, cell ASC) order — for every nprobe."""
     from mpg_data_warehouse_spark.operators.similarity import (
-        _collect_centroid_rows,
+        _centroid_rows,
+        _nearest_cells,
         _probe_cells,
+        ivf_write_index,
     )
+    from mpg_data_warehouse_spark.sources import txlog
 
     rng_rows = []
     for i in range(24):
@@ -394,23 +395,14 @@ def test_driver_side_probe_cells_match_probe_cells(spark, tmp_path):
             vec[0] = 1.0
         rng_rows.append(Row(vec_id=i, embedding=vec))
     corpus = spark.createDataFrame(rng_rows)
-    from mpg_data_warehouse_spark.operators.similarity import (
-        ivf_write_index,
-    )
-
     idx = str(tmp_path / "idx")
     ivf_write_index(corpus, idx, n_centroids=5, refine_iters=1)
-    centroids = spark.read.parquet(f"{idx}/_centroids")
-    cent_rows = _collect_centroid_rows(centroids)
+    cent_rows = _centroid_rows(txlog.snapshot_state(idx))
+    centroids = spark.createDataFrame(
+        cent_rows, "cent_id long, cent_vec array<double>"
+    )
     queries = spark.createDataFrame(rng_rows[:6])
-
-    def _dot(a, b):
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc += x * y
-        return acc
-
-    cent_norms = [math.sqrt(_dot(v, v)) for _, v in cent_rows]
+    q_rows = [(r.vec_id, r.embedding) for r in rng_rows[:6]]
     for nprobe in (1, 2, 5):
         spark_sel = {
             (r.query_id, r.cell)
@@ -418,15 +410,10 @@ def test_driver_side_probe_cells_match_probe_cells(spark, tmp_path):
                 queries, centroids, nprobe, "vec_id", "embedding"
             ).collect()
         }
-        py_sel = set()
-        for r in queries.collect():
-            qn = math.sqrt(_dot(r.embedding, r.embedding))
-            ranked = sorted(
-                (-(_dot(r.embedding, cv) / (qn * cn)), cell)
-                for (cell, cv), cn in zip(cent_rows, cent_norms)
-            )
-            for _, cell in ranked[:nprobe]:
-                py_sel.add((r.vec_id, cell))
+        py_sel = {
+            (qid, cell)
+            for qid, _v, _n, cell in _nearest_cells(q_rows, cent_rows, nprobe)
+        }
         assert py_sel == spark_sel, nprobe
 
 
@@ -483,3 +470,86 @@ def test_query_paths_plan_literals_and_bm25_probe_runs_two_jobs(
 
     warm = probe_jobs()
     assert probe_jobs() - warm <= 2
+
+
+def test_warm_single_query_retrieval_job_count(spark, tmp_path, jobs_run_by):
+    """A warm single-query request plans its dense probe from the pinned
+    index state alone: no schema-inference job for the centroids, the
+    inverted lists or the chunk store, and no centroid collect. Only
+    the query-embedding collect runs before the scoring jobs."""
+    from mpg_data_warehouse_spark.plans.retrieval import (
+        build_hybrid_index,
+        hybrid_retrieve,
+    )
+
+    idx = str(tmp_path / "idx")
+    chunks = str(tmp_path / "chunks")
+    bm25 = str(tmp_path / "bm25")
+    build_hybrid_index(
+        _corpus(spark), idx, chunks, bm25,
+        dim=32, max_tokens=16, overlap=4, n_centroids=3,
+    )
+    calls = {
+        "retrieve": lambda: retrieve(
+            spark, idx, chunks, ["telescope"], k=3, dim=32, nprobe=2
+        ).collect(),
+        "hybrid_retrieve": lambda: hybrid_retrieve(
+            spark, idx, chunks, bm25, ["telescope"], k=3, dim=32, nprobe=2
+        ).collect(),
+    }
+    for call in calls.values():
+        call()  # warm
+    jobs = {name: jobs_run_by(call) for name, call in calls.items()}
+    assert jobs["retrieve"] <= 5, jobs
+    assert jobs["hybrid_retrieve"] <= 9, jobs
+
+
+def test_retrieve_planned_before_an_index_change_answers_from_its_version(
+    spark, tmp_path
+):
+    """A ``retrieve`` frame pins the IVF index version it was planned
+    on: planned before ``ivf_delete_index`` or ``ivf_append_index`` and
+    collected after it, it returns the hits from before the change."""
+    from mpg_data_warehouse_spark.operators.similarity import (
+        ivf_append_index,
+        ivf_delete_index,
+    )
+
+    idx = str(tmp_path / "idx")
+    chunks = str(tmp_path / "chunks")
+    build_retrieval_index(
+        _corpus(spark), idx, chunks,
+        dim=32, max_tokens=16, overlap=4, n_centroids=2,
+    )
+    queries = ["solar panels", "telescope galaxy"]
+
+    def request():
+        return retrieve(spark, idx, chunks, queries, k=3, dim=32, nprobe=2)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    original = rows(request())
+    top = {r[2]: r[5] for r in original if r[-1] == 1}  # key -> text
+    # the top hits' vectors, re-embedded with the index's encoder
+    gone = hashed_feature_embedding(
+        spark.createDataFrame(list(top.items()), "chunk_key long, chunk_text string"),
+        "chunk_text",
+        dim=32,
+    ).select("chunk_key", "embedding")
+
+    planned = request()
+    assert ivf_delete_index(
+        spark, idx, spark.createDataFrame([Row(chunk_key=k) for k in top]),
+        id_col="chunk_key",
+    ) == len(top)
+    assert rows(planned) == original
+    deleted = rows(request())
+    assert deleted != original
+
+    planned = request()
+    assert ivf_append_index(
+        spark, idx, gone, id_col="chunk_key", vec_col="embedding"
+    ) == len(top)
+    assert rows(planned) == deleted
+    assert rows(request()) == original

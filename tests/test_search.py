@@ -1,5 +1,5 @@
 """Persisted inverted index: build, OR/AND search, stopword damping,
-and partition-filter pushdown on the term-bucket layout."""
+BM25 ranking, and probes that read only the query terms' bucket files."""
 
 import os
 import pytest
@@ -7,7 +7,7 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from mpg_data_warehouse_spark.operators.search import (
-    build_inverted_index,
+    build_ranked_index,
     search_terms,
 )
 
@@ -25,7 +25,7 @@ def _docs(spark):
 
 def test_search_any_and_all(spark, tmp_path):
     idx = str(tmp_path / "idx")
-    build_inverted_index(_docs(spark), idx)
+    build_ranked_index(_docs(spark), idx)
     any_hits = {
         r.doc_id for r in search_terms(spark, idx, ["alpha", "charlie"]).collect()
     }
@@ -48,7 +48,7 @@ def test_search_any_and_all(spark, tmp_path):
 def test_max_df_drops_stopword_postings(spark, tmp_path):
     idx = str(tmp_path / "idx")
     # 'alpha' appears in 3 docs -> dropped at max_df=2
-    build_inverted_index(_docs(spark), idx, max_df=2)
+    build_ranked_index(_docs(spark), idx, max_df=2)
     assert search_terms(spark, idx, ["alpha"]).count() == 0
     assert {
         r.doc_id for r in search_terms(spark, idx, ["charlie"]).collect()
@@ -56,18 +56,23 @@ def test_max_df_drops_stopword_postings(spark, tmp_path):
 
 
 def test_search_scan_is_partition_pruned(spark, tmp_path):
+    from mpg_data_warehouse_spark.operators.search import term_bucket_py
+    from mpg_data_warehouse_spark.sources import txlog
+    from mpg_data_warehouse_spark.sources.storage import uri_to_path
+
     idx = str(tmp_path / "idx")
-    build_inverted_index(_docs(spark), idx)
-    plan = (
-        search_terms(spark, idx, ["foxtrot"])
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    build_ranked_index(_docs(spark), idx)
+    state = txlog.snapshot_state(idx)
+    hits = search_terms(spark, idx, ["foxtrot"])
+    assert {r.doc_id for r in hits.collect()} == {3}
+    # the scan opens exactly the probed bucket's live files
+    probed = txlog._part_files(
+        state, "bucket", [term_bucket_py("foxtrot", state["meta"]["n_buckets"])]
     )
-    # the bucket IN-list must reach the scan's PartitionFilters, so
-    # non-matching bucket directories are never opened
-    assert "PartitionFilters" in plan
-    assert "bucket" in plan.split("PartitionFilters", 1)[1][:200], plan[:2000]
+    assert probed
+    assert {uri_to_path(f) for f in hits.inputFiles()} == {
+        os.path.join(idx, p) for p in probed
+    }
 
 
 def test_phrase_query_tokenizes_like_the_index(spark, tmp_path):
@@ -79,7 +84,7 @@ def test_phrase_query_tokenizes_like_the_index(spark, tmp_path):
             Row(doc_id=3, text="deep learning"),
         ]
     )
-    build_inverted_index(docs, idx)
+    build_ranked_index(docs, idx)
     # a phrase splits into its indexed terms instead of never matching
     assert {
         r.doc_id
@@ -256,25 +261,18 @@ def test_index_is_self_describing_on_bucket_count(spark, tmp_path):
     """A probe against an index built with a different n_buckets used
     to silently filter matching postings out; the layout is now
     recorded in the index and mismatched explicit values raise."""
-    from mpg_data_warehouse_spark.operators.search import (
-        bm25_search,
-        build_ranked_index,
-    )
+    from mpg_data_warehouse_spark.operators.search import bm25_search
 
-    docs = _docs(spark)
     idx = str(tmp_path / "idx32")
-    build_inverted_index(docs, idx, n_buckets=32)
+    build_ranked_index(_docs(spark), idx, n_buckets=32)
     # no n_buckets passed: resolved from the index meta
     got = {r.doc_id for r in search_terms(spark, idx, ["alpha"]).collect()}
     assert got == {1, 2, 4}
     with pytest.raises(ValueError, match="n_buckets=32"):
         search_terms(spark, idx, ["alpha"], n_buckets=64)
-
-    ridx = str(tmp_path / "ridx32")
-    build_ranked_index(docs, ridx, n_buckets=32)
-    assert bm25_search(spark, ridx, "alpha", k=5).count() == 3
+    assert bm25_search(spark, idx, "alpha", k=5).count() == 3
     with pytest.raises(ValueError, match="n_buckets=32"):
-        bm25_search(spark, ridx, "alpha", k=5, n_buckets=64)
+        bm25_search(spark, idx, "alpha", k=5, n_buckets=64)
 
 
 def test_bm25_append_matches_full_rebuild(spark, tmp_path):
@@ -389,25 +387,7 @@ def test_ingest_calls_evaluate_their_batch_once(spark, tmp_path):
     assert rows_read(lambda b: bm25_delete_index(b, idx), fresh) == len(fresh)
 
 
-def _jobs_run_by(spark, call) -> int:
-    """Spark jobs ``call`` runs on any driver thread (the index writes
-    run on ``await_all`` threads, outside the caller's job group):
-    the job ids the status store gained, read once the asynchronous
-    listener bus has fed it."""
-    ssc = spark.sparkContext._jsc.sc()
-    statuses = spark.sparkContext._gateway.jvm.java.util.ArrayList()
-
-    def next_job_id() -> int:
-        ssc.listenerBus().waitUntilEmpty()
-        jobs = ssc.statusStore().jobsList(statuses)  # newest first
-        return jobs.apply(0).jobId() + 1 if jobs.size() else 0
-
-    before = next_job_id()
-    call()
-    return next_job_id() - before
-
-
-def test_bm25_append_job_count(spark, tmp_path):
+def test_bm25_append_job_count(spark, tmp_path, jobs_run_by):
     """A warm append of a small batch runs at most 12 Spark jobs: the
     batch is read once and tf, dl and the stats come from one persisted
     postings frame (18 jobs with separate tf/dl frames and a join)."""
@@ -429,7 +409,7 @@ def test_bm25_append_job_count(spark, tmp_path):
             [Row(doc_id=i, text=f"charlie t{i} t{i}")
              for i in range(lo, lo + 4)]
         )
-        return _jobs_run_by(spark, lambda: bm25_append_index(batch, idx))
+        return jobs_run_by(lambda: bm25_append_index(batch, idx))
 
     append(100)  # warm
     assert append(200) <= 12
@@ -643,7 +623,7 @@ def test_bm25_compact_index_merges_files_preserves_results(spark, tmp_path):
         state = txlog.snapshot_state(idx)
         n = Counter(
             state["files"][p]["partition"][part]
-            for p in S._files(state, part)
+            for p in txlog._part_files(state, part)
         )
         return {v for v, c in n.items() if c >= 2}
 
@@ -674,22 +654,10 @@ def test_bm25_compact_index_merges_files_preserves_results(spark, tmp_path):
     assert txlog.latest_version(idx) == after["version"]
 
 
-class _InjectedCrash(Exception):
-    pass
-
-
-class _FailingCommitBackend:
-    """A commit store whose every install fails (the process dies
-    before the commit object lands)."""
-
-    def put_if_absent(self, path, payload):
-        raise _InjectedCrash(f"commit install of {path}")
-
-
 @pytest.mark.parametrize("fault", ["data_write", "commit_install"])
 @pytest.mark.parametrize("op", ["rebuild", "append", "delete", "compact"])
 def test_bm25_fault_leaves_index_whole_and_blind_retry_converges(
-    spark, tmp_path, monkeypatch, op, fault
+    spark, tmp_path, crash_at, op, fault
 ):
     """A fault at either commit point of any index change — after the
     change's data files are written, or while its commit installs —
@@ -724,25 +692,7 @@ def test_bm25_fault_leaves_index_whole_and_blind_retry_converges(
     }[op]
     before, version = _topk(spark, idx), txlog.latest_version(idx)
 
-    if fault == "commit_install":
-        prev = txlog.set_commit_backend(_FailingCommitBackend())
-        try:
-            with pytest.raises(_InjectedCrash):
-                change()
-        finally:
-            txlog.set_commit_backend(prev)
-    else:
-        real_write = txlog._write_data_files
-
-        def write_then_die(*a, **k):
-            real_write(*a, **k)
-            raise _InjectedCrash("after writing data files")
-
-        monkeypatch.setattr(txlog, "_write_data_files", write_then_die)
-        with pytest.raises(_InjectedCrash):
-            change()
-        monkeypatch.undo()
-
+    crash_at(fault, change)
     assert txlog.latest_version(idx) == version
     assert _topk(spark, idx) == before
     change()

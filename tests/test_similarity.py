@@ -4,12 +4,15 @@ against it (the standard ANN evaluation)."""
 from __future__ import annotations
 
 import math
+import os
 import random
 
+import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from mpg_data_warehouse_spark.operators import similarity as S
+from mpg_data_warehouse_spark.sources import txlog
 
 DIM = 16
 
@@ -24,6 +27,19 @@ def _vectors(spark, n=60, seed=7):
         vec = [x + rng.gauss(0, 0.1) for x in c]
         rows.append(Row(vec_id=i, embedding=[float(x) for x in vec]))
     return spark.createDataFrame(rows)
+
+
+def _live(path, state, cells=None):
+    """Absolute paths of the live files of ``cells`` (default: all)."""
+    return {
+        os.path.join(path, p) for p in txlog._part_files(state, "cell", cells)
+    }
+
+
+def _scanned(df):
+    from mpg_data_warehouse_spark.sources.storage import uri_to_path
+
+    return {uri_to_path(f) for f in df.inputFiles()}
 
 
 def _brute_force_py(rows, query_ids, k):
@@ -237,8 +253,16 @@ def test_ivf_index_at_rest_matches_in_flight_and_prunes(spark, tmp_path):
     }
     assert got == want
 
-    plan = probed._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [cell" in plan or "PartitionFilters: [isnotnull(cell" in plan or "cell#" in plan.split("PartitionFilters")[1][:200]
+    # the scan opens exactly the live files of the probed cells
+    state = txlog.snapshot_state(path)
+    cells = {
+        r[3]
+        for r in S._nearest_cells(
+            [tuple(r) for r in queries.collect()], S._centroid_rows(state), 3
+        )
+    }
+    assert _scanned(probed) == _live(path, state, cells)
+    assert _scanned(probed) < _live(path, state)
 
 
 def test_ivf_index_rebuild_is_idempotent(spark, tmp_path):
@@ -287,7 +311,7 @@ def test_ivf_append_index_incremental_ingest(spark, tmp_path):
     appended = ivf_append_index(spark, path, rest)
     assert appended == rest.count()
 
-    stored = spark.read.parquet(path)
+    stored = txlog.read(spark, path)
     assert stored.count() == n_total
     assert stored.select("neighbor_id").distinct().count() == n_total
 
@@ -304,8 +328,10 @@ def test_ivf_append_index_incremental_ingest(spark, tmp_path):
     assert abs(top.cos_sim - 1.0) < 1e-6
 
     # replay of the same batch double-inserts nothing
+    version = txlog.latest_version(path)
     assert ivf_append_index(spark, path, rest) == 0
-    assert spark.read.parquet(path).count() == n_total
+    assert txlog.latest_version(path) == version  # no empty commit
+    assert txlog.read(spark, path).count() == n_total
 
 
 # ---------------------------------------------------------------------------
@@ -492,11 +518,9 @@ def test_lsh_topk_checks_query_dim(spark):
 
 
 def test_ivf_delete_rewrites_only_hit_cells(spark, tmp_path):
-    """Deletion removes the ids, leaves untouched cells' files
-    byte-identical, removes fully-emptied cell dirs, and probes see
-    the change immediately."""
-    import os
-
+    """Deletion removes the ids in one commit that replaces only the
+    hit cells' files: untouched cells keep identical add paths, a
+    fully-emptied cell has no live file, and probes see the change."""
     from mpg_data_warehouse_spark.operators.similarity import (
         ivf_delete_index,
         ivf_probe_index,
@@ -513,34 +537,31 @@ def test_ivf_delete_rewrites_only_hit_cells(spark, tmp_path):
     path = str(tmp_path / "idx")
     ivf_write_index(vecs, path, n_centroids=4, id_col="vec_id",
                     vec_col="embedding")
-    idx = spark.read.parquet(path)
-    cell_of = {r.neighbor_id: r.cell for r in idx.collect()}
+    cell_of = {
+        r.neighbor_id: r.cell for r in txlog.read(spark, path).collect()
+    }
     victims = [i for i in range(40) if i % 4 == 0]  # one whole cell
     victims.append(1)  # plus one vector from another cell
-    before_files = {
-        c: sorted(os.listdir(os.path.join(path, f"cell={c}")))
-        for c in set(cell_of.values())
-    }
+    before = txlog.snapshot_state(path)
     n = ivf_delete_index(
         spark, path,
         spark.createDataFrame([Row(vec_id=v) for v in victims]),
     )
     assert n == len(victims)
-    after = spark.read.parquet(path)
-    remaining = {r.neighbor_id for r in after.collect()}
-    assert remaining == set(range(40)) - set(victims)
-    # the emptied cell's directory is gone
-    emptied = cell_of[0]
-    assert not os.path.exists(os.path.join(path, f"cell={emptied}"))
-    # cells with no victims keep their exact files
-    untouched = {
-        c for c in set(cell_of.values())
-        if not any(cell_of[v] == c for v in victims)
+    after = txlog.snapshot_state(path)
+    assert after["version"] == before["version"] + 1
+    remaining = {
+        r.neighbor_id for r in txlog.read(spark, path).collect()
     }
-    for c in untouched:
-        assert sorted(
-            os.listdir(os.path.join(path, f"cell={c}"))
-        ) == before_files[c]
+    assert remaining == set(range(40)) - set(victims)
+    # the emptied cell has no live file
+    assert not txlog._part_files(after, "cell", [cell_of[0]])
+    # cells with no victims keep their exact add paths
+    untouched = set(cell_of.values()) - {cell_of[v] for v in victims}
+    assert untouched
+    assert txlog._part_files(after, "cell", untouched) == txlog._part_files(
+        before, "cell", untouched
+    )
     # probe no longer returns deleted neighbors
     hits = ivf_probe_index(
         spark, path,
@@ -566,7 +587,8 @@ def test_ivf_delete_missing_ids_noop(spark, tmp_path):
         spark, path, spark.createDataFrame([Row(vec_id=999)])
     )
     assert n == 0
-    assert spark.read.parquet(path).count() == 8
+    assert txlog.latest_version(path) == 0  # no empty commit
+    assert txlog.read(spark, path).count() == 8
 
 
 def test_ivf_delete_full_wipe_keeps_index_usable(spark, tmp_path):
@@ -629,10 +651,101 @@ def test_ivf_append_guards_dim_and_in_batch_dups(spark, tmp_path):
         + [Row(vec_id=902, embedding=v)]
     )
     assert ivf_append_index(spark, path, batch) == 2
-    idx = spark.read.parquet(path)
+    idx = txlog.read(spark, path)
     assert idx.filter(F.col("neighbor_id") == 901).count() == 1
     # replay of the same batch appends nothing
     assert ivf_append_index(spark, path, batch) == 0
+
+
+@pytest.mark.parametrize("fault", ["data_write", "commit_install"])
+@pytest.mark.parametrize("op", ["rebuild", "append", "delete"])
+def test_ivf_fault_leaves_index_whole_and_blind_retry_converges(
+    spark, tmp_path, crash_at, op, fault
+):
+    """A fault at either commit point of an IVF index change — after
+    its data files are written, or while its commit installs — leaves
+    the index answering exactly as before at the same version. A blind
+    retry then adds one version and answers like an index taken
+    through the same history without a fault (for a rebuild: a fresh
+    build)."""
+    from mpg_data_warehouse_spark.operators.similarity import (
+        ivf_append_index,
+        ivf_delete_index,
+        ivf_probe_index,
+        ivf_write_index,
+    )
+
+    vecs = _vectors(spark, n=60)
+
+    def start(path):
+        ivf_write_index(vecs.filter("vec_id < 40"), path, n_centroids=4)
+        ivf_append_index(spark, path, vecs.filter("vec_id >= 40 and vec_id < 50"))
+
+    change = {
+        "rebuild": lambda p: ivf_write_index(
+            vecs.filter("vec_id < 55"), p, n_centroids=4
+        ),
+        # an overlapping redelivery: ids 45..49 are already indexed
+        "append": lambda p: ivf_append_index(
+            spark, p, vecs.filter("vec_id >= 45")
+        ),
+        "delete": lambda p: ivf_delete_index(
+            spark, p, vecs.filter("vec_id % 3 = 0")
+        ),
+    }[op]
+
+    def answer(path):
+        return sorted(
+            tuple(r)
+            for r in ivf_probe_index(
+                spark, path, vecs.filter("vec_id < 6"), k=100, nprobe=4
+            ).collect()
+        )
+
+    idx = str(tmp_path / "idx")
+    start(idx)
+    before, version = answer(idx), txlog.latest_version(idx)
+    crash_at(fault, lambda: change(idx))
+    assert txlog.latest_version(idx) == version
+    assert answer(idx) == before
+    change(idx)
+    assert txlog.latest_version(idx) == version + 1
+    ref = str(tmp_path / "ref")
+    start(ref)
+    change(ref)
+    assert answer(idx) == answer(ref) != before
+    assert txlog.snapshot_state(idx)["meta"] == txlog.snapshot_state(ref)["meta"]
+
+
+def test_ivf_vacuum_after_delete_erases_deleted_ids(spark, tmp_path):
+    """A delete leaves the replaced files to pinned readers; once
+    ``txlog.vacuum`` runs, no file under the index holds a deleted
+    id."""
+    import pyarrow.parquet as pq
+
+    from mpg_data_warehouse_spark.operators.similarity import (
+        ivf_append_index,
+        ivf_delete_index,
+        ivf_write_index,
+    )
+
+    path = str(tmp_path / "idx")
+    vecs = _vectors(spark, n=50)
+    ivf_write_index(vecs.filter("vec_id < 40"), path, n_centroids=4)
+    ivf_append_index(spark, path, vecs.filter("vec_id >= 40"))
+    victims = {0, 5, 41}
+    assert ivf_delete_index(
+        spark, path, spark.createDataFrame([Row(vec_id=v) for v in victims])
+    ) == len(victims)
+    txlog.vacuum(path, 1, 0)
+    held = []
+    for d, _, files in os.walk(path):
+        for f in files:
+            if f.endswith(".parquet"):
+                held += pq.read_table(
+                    os.path.join(d, f), columns=["neighbor_id"]
+                ).column(0).to_pylist()
+    assert sorted(held) == sorted(set(range(50)) - victims)
 
 
 def test_lsh_multiprobe_levels_expand_recall(spark):

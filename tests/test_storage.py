@@ -17,6 +17,7 @@ from mpg_data_warehouse_spark.sources.storage import (
     get_storage_backend,
     set_storage_backend,
 )
+from mpg_data_warehouse_spark.sources.txlog import LocalFSCommitBackend
 
 
 class RecordingBackend(LocalFSStorageBackend):
@@ -61,6 +62,29 @@ class RecordingBackend(LocalFSStorageBackend):
         super().install_dir(staging, live, if_absent=if_absent)
 
 
+class RecordingCommits(LocalFSCommitBackend):
+    """The default commit store, recording every install."""
+
+    def __init__(self):
+        self.installed: list[str] = []
+
+    def put_if_absent(self, path: str, payload: str) -> bool:
+        self.installed.append(path)
+        return super().put_if_absent(path, payload)
+
+
+def _json_outside_log(path: str) -> set[str]:
+    from mpg_data_warehouse_spark.sources.txlog import LOG_DIR
+
+    return {
+        os.path.join(d, f)
+        for d, _, files in os.walk(path)
+        for f in files
+        if f.endswith(".json")
+        and LOG_DIR not in os.path.relpath(d, path).split(os.sep)
+    }
+
+
 @pytest.fixture()
 def fake_backend():
     fake = RecordingBackend()
@@ -89,14 +113,6 @@ def test_bm25_lifecycle_routes_all_sidecars_through_backend(
         build_ranked_index,
     )
     from mpg_data_warehouse_spark.sources import txlog
-
-    class RecordingCommits(txlog.LocalFSCommitBackend):
-        def __init__(self):
-            self.installed: list[str] = []
-
-        def put_if_absent(self, path: str, payload: str) -> bool:
-            self.installed.append(path)
-            return super().put_if_absent(path, payload)
 
     commits = RecordingCommits()
     prev = txlog.set_commit_backend(commits)
@@ -181,10 +197,12 @@ def test_contended_install_fails_loudly_then_retries(spark, tmp_path):
 def test_retrieval_keybucket_versioned_route_through_backend(
     spark, tmp_path, fake_backend
 ):
-    """Round-7 seam completion: the retrieval meta sidecar, the
-    keybucket manifest, and the versioned snapshot manifest/deletes
-    all go through the injected backend (sidecar text lives ONLY in
-    the fake's dict — a bypassing open() hard-fails)."""
+    """Round-7 seam completion: the retrieval index's build commit
+    goes through the injected ``CommitBackend`` (no JSON sits under the
+    index outside its log), and the keybucket manifest and the
+    versioned snapshot manifest/deletes go through the injected
+    storage backend (sidecar text lives ONLY in the fake's dict — a
+    bypassing open() hard-fails)."""
     from mpg_data_warehouse_spark.operators.append import (
         merge_upsert_bucketed,
         write_keybucket_table,
@@ -194,22 +212,32 @@ def test_retrieval_keybucket_versioned_route_through_backend(
         snapshot_partitions,
     )
     from mpg_data_warehouse_spark.plans.retrieval import (
-        _resolve_encoder,
+        _check_encoder,
         build_retrieval_index,
     )
+    from mpg_data_warehouse_spark.sources import txlog
 
-    # --- retrieval: meta sidecar written + read via the backend
+    # --- retrieval: the IVF build, encoder included, is one commit
     docs = spark.createDataFrame(
         [Row(doc_id=i, text=f"alpha beta gamma delta doc {i}") for i in range(6)]
     )
     idx = str(tmp_path / "ridx")
-    build_retrieval_index(
-        docs, idx, str(tmp_path / "chunks"), dim=8, n_centroids=2
-    )
-    assert any(k.endswith("_retrieval_meta.json") for k in fake_backend.texts)
-    assert _resolve_encoder(idx, 8, "xxhash64") == (8, "xxhash64")
+    commits = RecordingCommits()
+    prev = txlog.set_commit_backend(commits)
+    try:
+        build_retrieval_index(
+            docs, idx, str(tmp_path / "chunks"), dim=8, n_centroids=2
+        )
+    finally:
+        txlog.set_commit_backend(prev)
+    assert os.path.join(idx, txlog.LOG_DIR, "00000000.json") in commits.installed
+    assert not _json_outside_log(idx)
+    assert not any(k.startswith(idx) for k in fake_backend.texts)
+    state = txlog.snapshot_state(idx)
+    assert state["meta"]["hash_fn"] == "xxhash64"
+    _check_encoder(state, idx, 8, "xxhash64")
     with pytest.raises(ValueError, match="different feature space"):
-        _resolve_encoder(idx, 16, "xxhash64")
+        _check_encoder(state, idx, 16, "xxhash64")
 
     # --- keybucket: manifest written + validated via the backend
     base = spark.createDataFrame([Row(k=i, v=i * 10) for i in range(20)])
